@@ -263,12 +263,20 @@ class SqlEngine:
         analog): ONE ``approx_count_distinct`` aggregation job per table,
         upgrading the registration-time footer stats so the broadcast
         planner can price equality predicates as 1/NDV instead of a
-        conservative constant. Registration itself never runs jobs —
-        this is the explicit opt-in, exactly like ANALYZE TABLE in any
-        warehouse. Analyzing all tables at sf10 (60M-row lineitem) costs
-        a few seconds once per session."""
-        from pyspark.sql import functions as F
+        conservative constant. This is the explicit opt-in, exactly like
+        ANALYZE TABLE in any warehouse. Analyzing all tables at sf10
+        (60M-row lineitem) costs a few seconds once per session.
 
+        Set-up runs its per-table work concurrently: ``register_dir``'s
+        reads (Spark's parquet schema inference is a job per file) and
+        this method's aggregations, one thread per table, each inheriting
+        the caller's job group, tags and scheduler pool. When a table's
+        job fails, every other table still gets its stats, then the first
+        failure (in catalog order) is raised as a :class:`SqlEngineError`
+        naming the table."""
+        from sql_to_ibis_spark.errors import SqlEngineError
+        from sql_to_ibis_spark.plans.compiler import _bq
+        from sql_to_ibis_spark.session import map_concurrently
         from sql_to_ibis_spark.sources.table_stats import TableStats
 
         from pyspark.sql import types as T
@@ -288,22 +296,32 @@ class SqlEngine:
                 return all(hashable(f.dataType) for f in dt.fields)
             return True
 
-        names = [table_name] if table_name else self.catalog.names()
-        for name in names:
+        def aggregate(name: str) -> tuple:
             entry = self.catalog.get(name)
             cols = [f.name for f in entry.df.schema.fields
                     if hashable(f.dataType)]
             bounded = [f.name for f in entry.df.schema.fields
                        if isinstance(f.dataType, orderable)]
-            aggs = [F.approx_count_distinct(c).alias(f"n{i}")
+            # SQL text, not Column objects: building runs in this thread
+            # before the jobs start, and a Column costs several Py4J
+            # round trips where a string costs one
+            aggs = [f"approx_count_distinct({_bq(c)}) AS n{i}"
                     for i, c in enumerate(cols)]
             # exact min/max in the SAME pass: footer stats are absent
             # for INT96 timestamps (no statistics by parquet spec) and
             # for non-parquet sources — analyze fills them everywhere
-            aggs += [F.min(c).alias(f"lo{i}") for i, c in enumerate(bounded)]
-            aggs += [F.max(c).alias(f"hi{i}") for i, c in enumerate(bounded)]
-            aggs.append(F.count(F.lit(1)).alias("__rows"))
-            row = entry.df.agg(*aggs).collect()[0]
+            aggs += [f"min({_bq(c)}) AS lo{i}" for i, c in enumerate(bounded)]
+            aggs += [f"max({_bq(c)}) AS hi{i}" for i, c in enumerate(bounded)]
+            aggs.append("count(1) AS __rows")
+            return entry, cols, bounded, entry.df.selectExpr(*aggs)
+
+        def collect(job: tuple) -> None:
+            entry, cols, bounded, agg = job
+            try:
+                row = agg.collect()[0]
+            except Exception as exc:
+                raise SqlEngineError(
+                    f"analyze failed for table '{entry.name}'") from exc
             st = entry.stats or TableStats(rows=int(row["__rows"]))
             st.rows = int(row["__rows"])
             st.ndv = {c.lower(): float(row[f"n{i}"])
@@ -313,6 +331,10 @@ class SqlEngine:
                     st.col_min[c.lower()] = row[f"lo{i}"]
                     st.col_max[c.lower()] = row[f"hi{i}"]
             entry.stats = st
+
+        # the aggregates are built here, the jobs run one per thread
+        names = [table_name] if table_name else self.catalog.names()
+        map_concurrently(self.spark, collect, [aggregate(n) for n in names])
 
     # -- layout advisor -------------------------------------------------------
 
@@ -813,7 +835,8 @@ class SqlEngine:
 
     def register_dir(self, sf_dir: str, tables: list[str] | None = None) -> None:
         """Register every ``<name>.parquet`` in a directory (the layout of
-        /root/testdata/sf*)."""
+        the test data's ``sf*`` directories). The files are read
+        concurrently, then registered in name order."""
         from sql_to_ibis_spark.sources.readers import read_table_dir
         from sql_to_ibis_spark.sources.table_stats import parquet_stats
 

@@ -5993,22 +5993,20 @@ class Compiler:
           only through the correlation key(s), the <>-column, fact-local
           filters, and ``COUNT(*)``,
 
-        the whole fact relation is replaced by a two-level hash
-        aggregate (one narrow exchange on the key — or zero on a
+        the whole fact relation is replaced by ONE hash aggregate,
+        ``groupBy(key)`` (one narrow exchange on the key — or zero on a
         key-bucketed layout — instead of the window's wide
         exchange + 60M-row sort), EXISTS tests become per-group
         aggregate tests, and ``COUNT(*)`` becomes ``SUM`` of the
         collapsed weights (join multiplicities against other relations
-        scale both identically). Level 1 groups by (key, s) computing
-        the outer-filter row count and one flag per member's local
-        predicate; level 2 groups by key computing, per member, the
-        count/min/max of distinct non-NULL ``s`` values holding that
-        member's property — the same count/min/max EXISTS test as
-        ``_apply_neq_exists_agg``, now evaluable at the single pinned
-        ``s`` with no join back to fact rows. The explicit repartition
-        on the key (skipped on a key-bucketed scan) lets BOTH aggregates
-        run in one post-shuffle stage (hash(key) satisfies the
-        (key, s) clustering requirement).
+        scale both identically). The aggregate computes the outer-filter
+        row count (the weight) and, per member, the min/max of the
+        non-NULL ``s`` values holding that member's local predicate:
+        the pinned ``s`` is the pin member's min when it equals its max,
+        and every other member's EXISTS test is the row-level
+        conditional min/max test of ``_apply_neq_exists_agg``, evaluated
+        at that single ``s`` with no join back to fact rows. The explicit
+        repartition on the key is skipped on a key-bucketed scan.
 
         NULL soundness: requires (a) one POSITIVE member — a fact row
         with a NULL correlation key fails its equi-correlation, so such
@@ -6185,7 +6183,7 @@ class Compiler:
         wlocal: list[ast.Expr] = []
         kept_where: list[ast.Expr] = []
         for c in other_conj:
-            if self._contains_subquery(c) \
+            if self._contains_any_subquery(c) \
                     or self._contains_nondeterministic(c):
                 return None
             fr = fact_refs(c)
@@ -6261,8 +6259,12 @@ class Compiler:
                 if isinstance(x, ast.ColumnRef):
                     try:
                         rinfo, true = pscope.resolve(x.name, x.table)
-                    except (AmbiguousColumnException, ColumnNotFoundError):
+                    except ColumnNotFoundError:
                         continue  # output-alias refs (ORDER BY/HAVING)
+                    except AmbiguousColumnException:
+                        # an error now; the collapsed fact would narrow
+                        # the ref to the other relation's column
+                        return False
                     if rinfo is t_info and true.lower() not in fact_cols:
                         return False
             return True

@@ -9,8 +9,15 @@ vectorized).
 from __future__ import annotations
 
 import os
+from collections.abc import Callable, Iterable
+from concurrent.futures import ThreadPoolExecutor
+from typing import TypeVar
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import SparkSession
+
+T = TypeVar("T")
+R = TypeVar("R")
 
 
 def get_spark(app_name: str = "sql_to_ibis_spark",
@@ -85,3 +92,40 @@ def get_spark(app_name: str = "sql_to_ibis_spark",
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
     )
     return builder.getOrCreate()
+
+
+def map_concurrently(spark: SparkSession, fn: Callable[[T], R],
+                     items: Iterable[T]) -> list[R]:
+    """``[fn(x) for x in items]`` with every call on its own thread: for
+    independent per-table Spark work (set-up's schema reads and ANALYZE
+    jobs), which one after another leaves most cores idle.
+
+    Each call runs under ``pyspark.inheritable_thread_target(spark)``,
+    wrapped separately so no two threads share one copy of the caller's
+    local properties: the job group, job tags and scheduler pool the
+    caller set apply to every job a call starts. ``spark`` is the active
+    session in every thread, as it is in the caller's. Results come back
+    in input order. Every call finishes before the first failure (in
+    input order) is raised, so one failing item neither stops the others
+    nor leaves jobs running behind the caller."""
+    items = list(items)
+    if not items:
+        return []
+
+    def call(x: T) -> R:
+        # the JVM keeps the active session per thread, and both Spark's
+        # conf lookup and PySpark read it (PySpark decides from it, once
+        # per process, whether to record DataFrame call sites: a thread
+        # without one would turn that off for every later query)
+        spark._jvm.SparkSession.setActiveSession(spark._jsparkSession)
+        return fn(x)
+
+    def inherit() -> Callable[[T], R]:
+        wrap = inheritable_thread_target(spark)
+        # without pinned threads PySpark hands the session back: there
+        # are no thread-local properties to carry over then
+        return wrap(call) if callable(wrap) else call
+
+    with ThreadPoolExecutor(max_workers=len(items)) as pool:
+        futures = [pool.submit(inherit(), x) for x in items]
+    return [f.result() for f in futures]

@@ -21,6 +21,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sql_to_ibis_spark.session import map_concurrently
+
 
 def _nanos_timestamp_columns(path: str) -> list[str]:
     """Column names stored as parquet TIMESTAMP(NANOS) in the file footer."""
@@ -39,7 +41,12 @@ def _nanos_timestamp_columns(path: str) -> list[str]:
 
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    df = spark.read.parquet(path)
+    return _engine_types(spark.read.parquet(path), path)
+
+
+def _engine_types(df: DataFrame, path: str) -> DataFrame:
+    """``df``, read from the parquet at ``path``, with its timestamps in
+    the types the engine surfaces."""
     probe = path
     if os.path.isdir(path):
         inner = sorted(glob.glob(os.path.join(path, "*.parquet")))
@@ -85,11 +92,15 @@ def read_table_dir(
     spark: SparkSession, sf_dir: str, tables: list[str] | None = None
 ) -> dict[str, DataFrame]:
     """Load every ``<name>.parquet`` under a directory (the /root/testdata
-    layout) → {name: DataFrame}."""
-    out: dict[str, DataFrame] = {}
+    layout) → {name: DataFrame}, in name order, as ``read_parquet`` does.
+    Schema inference, a Spark job per file, runs concurrently; the type
+    fix-ups are Python-side work and stay in the caller's thread."""
+    paths: dict[str, str] = {}
     for p in sorted(glob.glob(os.path.join(sf_dir, "*.parquet"))):
         name = os.path.splitext(os.path.basename(p))[0]
-        if tables is not None and name not in tables:
-            continue
-        out[name] = read_parquet(spark, p)
-    return out
+        if tables is None or name in tables:
+            paths[name] = p
+    frames = map_concurrently(
+        spark, lambda path: spark.read.parquet(path), paths.values())
+    return {name: _engine_types(df, path)
+            for (name, path), df in zip(paths.items(), frames)}

@@ -178,3 +178,43 @@ def test_collapse_non_candidates_fall_through(synth, monkeypatch,
     forced = df.toPandas()
     monkeypatch.setenv("SPARK_GRAFT_NEQ_EXISTS_COLLAPSE", "0")
     compare_frames(synth.query(sql).toPandas(), forced)
+
+
+def test_collapse_bails_on_scalar_subquery_conjunct(engine, ddb,
+                                                    monkeypatch):
+    # a fact-only conjunct whose scalar subquery correlates to ANOTHER
+    # outer relation (o) cannot be recompiled against the bare fact
+    sql = Q21.replace(
+        "AND l1.l_returnflag = 'R'",
+        "AND l1.l_returnflag = 'R' AND l1.l_quantity <= "
+        "(SELECT max(l4.l_quantity) FROM lineitem l4 "
+        "WHERE l4.l_orderkey = o.o_orderkey)")
+    monkeypatch.setenv("SPARK_GRAFT_NEQ_EXISTS_COLLAPSE", "0")
+    stock = engine.query(sql).toPandas()
+    assert len(stock), "the scalar conjunct should keep every q21 row"
+    monkeypatch.setenv("SPARK_GRAFT_NEQ_EXISTS_COLLAPSE", "1")
+    df = engine.query(sql)
+    assert "__nxc_" not in _opt(df)
+    compare_frames(df.toPandas(), stock, ordered=True)
+    compare_frames(stock, ddb.execute(sql).fetchdf(), ordered=True)
+
+
+def test_collapse_keeps_ambiguity_error(synth, spark, monkeypatch):
+    # `flag` names a column of the fact AND of the dim: ambiguous as
+    # written, so the collapse (which narrows the fact to k/s) must not
+    # turn the error into a result over the dim's column
+    from sql_to_ibis_spark.errors import AmbiguousColumnException
+
+    synth.register_temp_table(spark.createDataFrame(pd.DataFrame({
+        "ds": [10, 20, 40], "dname": ["d10", "d20", "d40"],
+        "flag": ["x", "y", "z"]})), "nxc_dim")
+    sql = (SYNTH_SQL.replace("SELECT d.dname,", "SELECT flag,")
+           .replace("GROUP BY d.dname ORDER BY dname",
+                    "GROUP BY flag ORDER BY flag"))
+    errors = []
+    for mode in ("0", "1"):
+        monkeypatch.setenv("SPARK_GRAFT_NEQ_EXISTS_COLLAPSE", mode)
+        with pytest.raises(AmbiguousColumnException) as info:
+            synth.query(sql).collect()
+        errors.append(str(info.value))
+    assert errors[0] == errors[1], errors
