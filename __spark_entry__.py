@@ -113,8 +113,9 @@ def _engine_for(spark: SparkSession, sf_dir: str):
             # exactly the r13 set: lineitem(l_orderkey),
             # orders(o_orderkey), documents(doc_id). Sorted buckets:
             # one file per bucket, so scans REPORT the ordering and
-            # window/merge plans on the key elide their sorts (q21
-            # window path 1.78 s vs 2.21 s agg at sf10).
+            # window/merge plans on the key elide their sorts (the q21
+            # collapse aggregate needs no exchange on l_orderkey:
+            # sf10 bucketed 4.09 -> 2.49 s, OPTIMIZATION_r16.md).
             try:
                 advice = eng.advise_layout(
                     {n: s for n, (s, _) in _PAIRS.items()},

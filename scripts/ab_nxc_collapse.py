@@ -1,7 +1,7 @@
 """A/B: q21's <>-EXISTS family — pinned group collapse
-(SPARK_GRAFT_NEQ_EXISTS_COLLAPSE default) vs the r15 window self-rewrite
-(=0). The env var is read at compile time, so both variants coexist in
-one session (interleaved; machine drift hits both sides).
+(SPARK_GRAFT_NEQ_EXISTS_COLLAPSE default) vs the stock semi/anti-join
+plan (=0). The env var is read at compile time, so both variants coexist
+in one session (interleaved; machine drift hits both sides).
 
     python scripts/ab_nxc_collapse.py <sf_dir> [trials] [names...]
 """

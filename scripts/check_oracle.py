@@ -59,7 +59,6 @@ def main() -> int:
         # r11: NDV clamping CLOSES the near-unique-key prepart gate
         # (prod ndv 100 << rows/8) — env-force it open instead
         os.environ["SPARK_GRAFT_PREPART_AGG"] = "1"
-        os.environ["SPARK_GRAFT_NEQ_EXISTS_AGG"] = "1"
         # r13: build-side keyset reduction for correlated semi/anti
         os.environ["SPARK_GRAFT_SEMI_BUILD_KEYSET"] = "1"
         # r14: constraint flag rewrites (open both size gates) and the
@@ -67,12 +66,6 @@ def main() -> int:
         os.environ["SPARK_GRAFT_CONSTRAINT_FLAG_MIN_ROWS"] = "0"
         os.environ["SPARK_GRAFT_CONSTRAINT_FLAG_MAX_KEYS"] = "1e18"
         os.environ["SPARK_GRAFT_TOTAL_PIN"] = "1"
-        # r12: stats inflation would auto-open the window self-rewrite,
-        # which CONSUMES the q21 shape before the agg path sees it —
-        # pin it closed here so this sweep exercises the forced AGG
-        # plan; the window plan gets its own full sweep
-        # (SPARK_GRAFT_NEQ_EXISTS_WINDOW=1 python scripts/check_oracle.py)
-        os.environ.setdefault("SPARK_GRAFT_NEQ_EXISTS_WINDOW", "0")
         from sql_to_ibis_spark import SqlEngine
         eng = SqlEngine(spark)
         eng.register_dir(sf_dir)

@@ -38,7 +38,6 @@ than accumulating live result handles. Eager operators
 
 from __future__ import annotations
 
-import os
 import warnings
 
 import pandas as pd
@@ -254,38 +253,60 @@ def _minhash_sig_udf(num_hashes: int, shingle_size: int):
     return _sig
 
 
-def _minhash_sig_frame(df: DataFrame, id_col: str, th_col: Column,
-                       num_hashes: int, shingle_size: int) -> DataFrame:
-    """Frame-level signature stage: ``(id, sig)`` via ``mapInArrow``.
-
-    The pandas UDF form pays a per-batch object boundary both ways —
-    Arrow ``list<int64>`` → one numpy array PER ROW (then re-concatenated
-    by ``_shingle_flat``) on input, and a Series of per-row arrays on
-    output. This form reads the ListArray's offsets/values buffers
-    directly (the flat layout the kernel wants is Arrow's native layout)
-    and writes the output list array from one flat buffer. Identical
-    results by construction (same ``_shingles_from_flat`` /
-    ``_sig_from_shingles`` kernels; equality verified over 500 k sf10
-    docs in scripts/ab_minhash_arrow.py) — measured 2× on the signature
-    stage (sf10: 15.2 s pandas vs 7.8 s arrow, interleaved).
-    ``SPARK_GRAFT_MINHASH_ARROW=0`` falls back to the pandas form.
+def _sig_list_array(th, a_all, b_all, num_hashes: int, k: int):
+    """Signatures of one Arrow ``list<int64>`` batch of token hashes, as a
+    ``list<int64>`` array: reads the offsets/values buffers directly (the
+    flat layout ``_shingles_from_flat`` wants is Arrow's native layout)
+    and writes the output from one flat buffer.
 
     NULL token arrays (NULL text upstream) keep NULL signatures: the
-    input validity bitmap is copied onto the output list array. Arrow
-    list offsets under null slots are only guaranteed monotonic, so a
-    null row may carry a nonzero-length slice — its (masked-away)
-    signature is computed harmlessly from that slice."""
+    input validity bitmap is copied onto the output. Arrow list offsets
+    under null slots are only guaranteed monotonic, so a null slot may
+    cover a nonzero-length slice of values; those values are masked out
+    before shingling and the slot shingles as an empty document."""
     import numpy as np
+    import pyarrow as pa
 
-    if os.environ.get("SPARK_GRAFT_MINHASH_ARROW") == "0":
-        return df.select(
-            F.col(id_col).alias("id"),
-            _minhash_sig_udf(num_hashes, shingle_size)(th_col).alias("sig"))
+    n_docs = len(th)
+    raw_offs = th.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
+    raw_lens = np.diff(raw_offs)
+    null_mask = th.is_null().to_numpy(zero_copy_only=False)
+    vals = th.values.to_numpy(zero_copy_only=False).astype(
+        np.int64, copy=False)[raw_offs[0]:raw_offs[-1]]
+    if null_mask.any():
+        lens = np.where(null_mask, 0, raw_lens)
+        flat = vals[np.repeat(~null_mask, raw_lens)]
+    else:
+        lens, flat = raw_lens, vals
+    offs_in = np.zeros(n_docs, dtype=np.int64)
+    np.cumsum(lens[:-1], out=offs_in[1:])
+    sh, _, offs = _shingles_from_flat(flat, lens, offs_in, k)
+    out = _sig_from_shingles(sh, offs, n_docs, a_all, b_all, num_hashes)
+    sig_offs = np.arange(0, (n_docs + 1) * num_hashes, num_hashes,
+                         dtype=np.int32)
+    return pa.ListArray.from_arrays(
+        pa.array(sig_offs), pa.array(out.T.reshape(-1), type=pa.int64()),
+        mask=(pa.array(null_mask) if null_mask.any() else None))
+
+
+def _minhash_sig_frame(df: DataFrame, id_col: str, th_col: Column,
+                       num_hashes: int, shingle_size: int) -> DataFrame:
+    """Frame-level signature stage: ``(id, sig)`` via ``mapInArrow`` over
+    ``_sig_list_array``.
+
+    The pandas UDF form (``minhash_signature``) pays a per-batch object
+    boundary both ways — Arrow ``list<int64>`` → one numpy array PER ROW
+    (then re-concatenated by ``_shingle_flat``) on input, and a Series of
+    per-row arrays on output. This form shares its kernels
+    (``_shingles_from_flat`` / ``_sig_from_shingles``), so results are
+    identical row for row (tests/test_operators.py pins it against
+    ``minhash_signature``) — measured 2× on the signature stage (sf10:
+    15.2 s pandas vs 7.8 s arrow, interleaved)."""
+    import numpy as np
 
     params = _minhash_params(num_hashes)
     a_all = np.array([a for a, _ in params], dtype=np.int64)
     b_all = np.array([b for _, b in params], dtype=np.int64)
-    k = shingle_size
     src = df.select(F.col(id_col).alias("id"), th_col.alias("__th"))
     id_field = src.schema.fields[0]
 
@@ -296,37 +317,9 @@ def _minhash_sig_frame(df: DataFrame, id_col: str, th_col: Column,
             ids, th = batch.column(0), batch.column(1)
             if isinstance(th, pa.ChunkedArray):  # defensive; not expected
                 th = th.combine_chunks()
-            n_docs = len(th)
-            if n_docs == 0:
+            if len(th) == 0:
                 continue
-            raw_offs = th.offsets.to_numpy(zero_copy_only=False).astype(
-                np.int64)
-            lens = np.diff(raw_offs)
-            null_mask = th.is_null().to_numpy(zero_copy_only=False)
-            if null_mask.any():
-                lens = np.where(null_mask, 0, lens)
-            offs_in = np.zeros(n_docs, dtype=np.int64)
-            np.cumsum(lens[:-1], out=offs_in[1:])
-            vals = th.values.to_numpy(zero_copy_only=False).astype(
-                np.int64, copy=False)
-            if null_mask.any():
-                # re-pack around null slots so flat is contiguous
-                flat = np.concatenate(
-                    [vals[raw_offs[i]:raw_offs[i + 1]]
-                     for i in range(n_docs) if not null_mask[i]]) \
-                    if int(lens.sum()) else np.zeros(0, dtype=np.int64)
-            else:
-                base = int(raw_offs[0])
-                flat = vals[base:base + int(lens.sum())]
-            sh, _, offs = _shingles_from_flat(flat, lens, offs_in, k)
-            out = _sig_from_shingles(sh, offs, n_docs, a_all, b_all,
-                                     num_hashes)
-            sig_offs = np.arange(0, (n_docs + 1) * num_hashes, num_hashes,
-                                 dtype=np.int32)
-            sig = pa.ListArray.from_arrays(
-                pa.array(sig_offs), pa.array(out.T.reshape(-1),
-                                             type=pa.int64()),
-                mask=(pa.array(null_mask) if null_mask.any() else None))
+            sig = _sig_list_array(th, a_all, b_all, num_hashes, shingle_size)
             yield pa.RecordBatch.from_arrays([ids, sig], ["id", "sig"])
 
     out_schema = T.StructType([

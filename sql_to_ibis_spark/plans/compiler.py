@@ -247,7 +247,6 @@ class Compiler:
             self._compile_depth -= 1
             if self._compile_depth == 0:
                 self.__dict__.pop("_in_keyset_cache", None)
-                self.__dict__.pop("_nx_window_filters", None)
                 # synthetic collapsed-frame CTE registrations are scoped
                 # to one top-level compile (names are unique, so this is
                 # a footprint bound, not a correctness need)
@@ -462,15 +461,6 @@ class Compiler:
             self._in_keyset_cache.update(ks_cache)
             saved_bcast = getattr(self, "_bcast_hints", {})
             self._bcast_hints = self._plan_stats_broadcasts(node)
-            # runs AFTER the semi/keyset planning (it bails on relations
-            # those passes will reduce); the filters dict is id-keyed with
-            # node-identity double-checks and cleared per top-level compile
-            saved_nxw = getattr(self, "_nx_window_plan", {})
-            nxw_plan, nxw_filters = self._plan_neq_exists_window(node)
-            self._nx_window_plan = nxw_plan
-            if not hasattr(self, "_nx_window_filters"):
-                self._nx_window_filters = {}
-            self._nx_window_filters.update(nxw_filters)
             try:
                 for rel_ast in node.relations:
                     if isinstance(rel_ast, ast.UnnestRef):
@@ -498,7 +488,6 @@ class Compiler:
                 self._semi_plan = saved_semi
                 self._cte_attach = saved_attach
                 self._bcast_hints = saved_bcast
-                self._nx_window_plan = saved_nxw
             scope = Scope(rels)
         else:
             df = self.spark.range(1)
@@ -5264,16 +5253,7 @@ class Compiler:
             display = rel.alias or entry.name
             info = self._make_rel_info(display, entry.df, existing)
             info.base_df = entry.df
-            frame = entry.df
-            wgroups = getattr(self, "_nx_window_plan", {}).get(id(rel))
-            if wgroups:
-                # <>-EXISTS window aggregates attach to the RAW scan (the
-                # planner guarantees no reduction is planned for this rel,
-                # so nothing below the window can drop rows); the attached
-                # __nxw_* columns are invisible to `info` and ride the
-                # joins until _apply_where consumes and drops them
-                frame = self._attach_nx_windows(frame, wgroups)
-            reduced = self._apply_semi_reduction(rel, frame)
+            reduced = self._apply_semi_reduction(rel, entry.df)
             return reduced.alias(info.qualifier), [info]
         if isinstance(rel, ast.SubqueryRef):
             inner = self.compile(rel.query)
@@ -5662,9 +5642,6 @@ class Compiler:
                         "AND-conjuncts of WHERE"
                     )
                 df = df.filter(self.compile_expr(conjunct, scope))
-        df, subq, nx_drop = self._apply_neq_exists_window_filters(
-            df, subq, scope)
-        df, subq = self._apply_neq_exists_agg(df, subq, scope)
         for node, negated in subq:
             if isinstance(node, ast.InSubquery):
                 df = self._apply_in_subquery(
@@ -5676,8 +5653,6 @@ class Compiler:
                     df, node, scope, negated=node.negated ^ negated,
                     outer_node=select_node,
                 )
-        if nx_drop:
-            df = df.drop(*nx_drop)
         return df
 
     def _split_conjuncts(self, expr: ast.Expr) -> list[ast.Expr]:
@@ -5751,25 +5726,21 @@ class Compiler:
             inner_df = inner_df.filter(self.compile_expr(conj, inner_scope))
         return inner_df, inner_scope, local, correlated
 
-    # ----------------------------------------- <>-EXISTS aggregate unnesting
+    # ------------------------------------ <>-EXISTS pinned group collapse
 
     def _neq_exists_spec(self, sub, scope: Scope) -> "dict | None":
-        """Eligibility analysis for the min/max aggregate rewrite of a
-        <>-correlated EXISTS (the TPC-H q21 shape):
+        """Shape analysis of one <>-correlated EXISTS body (the TPC-H q21
+        member shape) for ``_try_neq_exists_collapse``:
 
             EXISTS (SELECT 1 FROM t WHERE t.k = outer.k
                     AND t.s <> outer.s [AND pure-inner filters])
 
-        is equivalent to a per-``k`` aggregate test: a different ``s``
-        exists in the group iff ``min(s) <> outer.s OR max(s) <> outer.s``
-        (``min``/``max`` ignore NULL ``s`` rows, which can never satisfy
-        ``<>``; an absent or all-NULL group means EXISTS is false; a NULL
-        ``outer.s`` makes the inner predicate NULL for every row, so
-        EXISTS is false — all encoded NULL-deterministically below).
-
-        Returns a spec dict (table, eq pairs, neq pair, local filters)
-        or None when the shape doesn't match. Shapes that don't match
-        fall through to the stock semi/anti join unchanged."""
+        over a single catalog table ``t``, with one or more equi-pairs,
+        exactly one ``<>`` pair and any number of filters that reference
+        ``t`` alone. Returns a spec dict (``rel``, ``eq`` pairs, the
+        ``neq`` pair, the ``local`` filters with qualifiers stripped, and
+        the footer row count ``stats_rows``) or None when the body has
+        any other shape."""
         if not isinstance(sub, ast.SelectNode) or len(sub.relations) != 1:
             return None
         rel = sub.relations[0]
@@ -5854,114 +5825,10 @@ class Compiler:
                 return x
             return _transform_expr(e, tx)
 
-        sig = (rel.name.lower(),
-               tuple(sorted((c, self._canon(o, scope)) for c, o in eq)))
-        return {"rel": rel, "sig": sig, "eq": eq, "neq": neq,
+        return {"rel": rel, "eq": eq, "neq": neq,
                 "local": [strip(c) for c in local],
                 "stats_rows": float(entry.stats.rows)
                 if entry.stats is not None else None}
-
-    def _apply_neq_exists_agg(
-        self, df: DataFrame, subq: list[tuple], scope: Scope
-    ) -> tuple[DataFrame, list[tuple]]:
-        """Rewrite eligible <>-correlated EXISTS/NOT EXISTS conjuncts as
-        ONE fused per-key aggregate join per (table, correlation-key)
-        group (see _neq_exists_spec for the equivalence). Wins doubly at
-        scale: the probe side collapses from every inner row to one row
-        per key BEFORE the join (hash join against a group-reduced side
-        instead of a sort-merge semi/anti over the full inner), and
-        MULTIPLE subqueries over the same key — q21 probes lineitem
-        twice — share a single aggregation pass via conditional
-        aggregates, so the inner is scanned and shuffled once for all of
-        them. The left join against a one-row-per-key aggregate
-        preserves outer multiplicity exactly, so no row-id dedup is
-        needed. Measured sf10 (interleaved A/B): q21 7.4 → 4.8 s.
-
-        Gate: automatic when footer stats certify the inner ≥ 1M rows
-        (below that the stock semi join is already cheap);
-        ``SPARK_GRAFT_NEQ_EXISTS_AGG=1`` forces, ``=0`` disables."""
-        mode = os.environ.get("SPARK_GRAFT_NEQ_EXISTS_AGG", "")
-        if mode == "0":
-            return df, subq
-        groups: dict[tuple, list[tuple[dict, bool]]] = {}
-        remaining: list[tuple] = []
-        for node, negated in subq:
-            spec = None
-            if isinstance(node, ast.ExistsSubquery):
-                spec = self._neq_exists_spec(node.subquery, scope)
-                if spec is not None and mode != "1" and (
-                        spec["stats_rows"] is None
-                        or spec["stats_rows"] < 1_000_000):
-                    spec = None
-            if spec is None:
-                remaining.append((node, negated))
-            else:
-                groups.setdefault(spec["sig"], []).append(
-                    (spec, node.negated ^ negated))
-        for sig, members in groups.items():
-            first = members[0][0]
-            rdf, rinfos = self._compile_relation(
-                first["rel"], list(scope.relations))
-            base_scope = Scope(rinfos)
-            n = next(self._tmp_counter)
-            knames = [f"__nxk_{n}_{j}" for j in range(len(first["eq"]))]
-            key_cols = [
-                self.compile_expr(
-                    ast.ColumnRef(name=c, table=None), base_scope).alias(kn)
-                for (c, _), kn in zip(first["eq"], knames)]
-            aggs: list[Column] = []
-            filters: list[tuple[Column, bool, str, str, str]] = []
-            for i, (spec, negated) in enumerate(members):
-                s_col = self.compile_expr(
-                    ast.ColumnRef(name=spec["neq"][0], table=None),
-                    base_scope)
-                cond_i: Column | None = None
-                for lc in spec["local"]:
-                    c = self.compile_expr(lc, base_scope)
-                    cond_i = c if cond_i is None else (cond_i & c)
-                w = F.when(cond_i, s_col) if cond_i is not None else s_col
-                cnt, mn, mx = (f"__nx_{n}_{i}_{t}"
-                               for t in ("cnt", "mn", "mx"))
-                aggs += [F.count(w).alias(cnt), F.min(w).alias(mn),
-                         F.max(w).alias(mx)]
-                outer_s = self.compile_expr(spec["neq"][1], scope)
-                filters.append((outer_s, negated, cnt, mn, mx))
-            # near-unique keys: shuffle the raw rows instead of a useless
-            # map-side partial hash build (same reasoning and gate as
-            # _maybe_prepartition_agg; forced mode keeps the stock shape)
-            rows = first["stats_rows"]
-            if rows and rows >= 4_000_000:
-                st = self.catalog.get(first["rel"].name).stats
-                ndv = getattr(st, "ndv", None) or {}
-                prod = 1.0
-                for c, _ in first["eq"]:
-                    v = ndv.get(c.lower())
-                    prod = prod * v if v else 0.0
-                if prod >= rows / 8:
-                    rdf = rdf.repartition(
-                        *[self.compile_expr(
-                            ast.ColumnRef(name=c, table=None), base_scope)
-                          for c, _ in first["eq"]])
-            grouped = rdf.groupBy(*key_cols).agg(*aggs)
-            jcond: Column | None = None
-            for (c, outer_ast), kn in zip(first["eq"], knames):
-                e = self.compile_expr(outer_ast, scope) == F.col(_bq(kn))
-                jcond = e if jcond is None else (jcond & e)
-            df = df.join(grouped, jcond, "left")
-            for outer_s, negated, cnt, mn, mx in filters:
-                exists_b = (
-                    (F.coalesce(F.col(_bq(cnt)), F.lit(0)) > 0)
-                    & outer_s.isNotNull()
-                    & ((F.col(_bq(mn)) != outer_s)
-                       | (F.col(_bq(mx)) != outer_s)))
-                df = df.filter(~exists_b if negated else exists_b)
-            drop = list(knames)
-            for _, _, cnt, mn, mx in filters:
-                drop += [cnt, mn, mx]
-            df = df.drop(*drop)
-        return df, remaining
-
-    # ------------------------------------ <>-EXISTS pinned group collapse
 
     @staticmethod
     def _nxc_fp(e: ast.Expr) -> str:
@@ -5979,8 +5846,12 @@ class Compiler:
         self, node: ast.SelectNode
     ) -> "ast.SelectNode | None":
         """Pinned GROUP COLLAPSE of the <>-correlated EXISTS family (the
-        TPC-H q21 shape) — the finishing move past the window rewrite
-        (``_plan_neq_exists_window``): when
+        TPC-H q21 shape): EXISTS / NOT EXISTS members over the outer fact
+        itself, each correlated on the fact's key(s) and a ``<>`` on one
+        more fact column ``s``
+        (``l2.l_orderkey = l1.l_orderkey AND l2.l_suppkey <> l1.l_suppkey``).
+        The stock plan probes the fact with one semi/anti join per member.
+        When
 
         * a NEGATED member's inner-local predicate set is implied by the
           outer query's own fact-local filters (q21: the NOT EXISTS is
@@ -5994,19 +5865,18 @@ class Compiler:
           filters, and ``COUNT(*)``,
 
         the whole fact relation is replaced by ONE hash aggregate,
-        ``groupBy(key)`` (one narrow exchange on the key — or zero on a
-        key-bucketed layout — instead of the window's wide
-        exchange + 60M-row sort), EXISTS tests become per-group
-        aggregate tests, and ``COUNT(*)`` becomes ``SUM`` of the
-        collapsed weights (join multiplicities against other relations
-        scale both identically). The aggregate computes the outer-filter
-        row count (the weight) and, per member, the min/max of the
-        non-NULL ``s`` values holding that member's local predicate:
-        the pinned ``s`` is the pin member's min when it equals its max,
-        and every other member's EXISTS test is the row-level
-        conditional min/max test of ``_apply_neq_exists_agg``, evaluated
-        at that single ``s`` with no join back to fact rows. The explicit
-        repartition on the key is skipped on a key-bucketed scan.
+        ``groupBy(key)`` (one exchange on the key, or none on a
+        key-bucketed layout), EXISTS tests become per-group aggregate
+        tests, and ``COUNT(*)`` becomes ``SUM`` of the collapsed weights
+        (join multiplicities against other relations scale both
+        identically). The aggregate computes the outer-filter row count
+        (the weight) and, per member, the min/max of the non-NULL ``s``
+        values holding that member's local predicate. The pinned ``s``
+        is the pin member's min when it equals its max. Every other
+        member's EXISTS test asks whether its group holds a non-NULL
+        ``s`` other than the pinned one, ``min <> s0 OR max <> s0``,
+        with no join back to fact rows. The explicit repartition on the
+        key is skipped on a key-bucketed scan.
 
         NULL soundness: requires (a) one POSITIVE member — a fact row
         with a NULL correlation key fails its equi-correlation, so such
@@ -6014,13 +5884,15 @@ class Compiler:
         away; (b) an inner equi-join between the fact's ``s`` and
         another relation — NULL-``s`` rows are dropped by that join in
         the original plan, so the collapsed weight counts only
-        non-NULL-``s`` rows. min/max/count ignore NULL ``s`` exactly as
-        the agg rewrite's conditional aggregates do.
+        non-NULL-``s`` rows. min/max ignore NULL ``s``, which can never
+        satisfy ``<>``.
 
-        Gate mirrors the window path: footer stats certify the fact
-        ≥ 1M rows; ``SPARK_GRAFT_NEQ_EXISTS_COLLAPSE=1`` forces, ``=0``
-        disables (falling back to the window/agg-join rewrites).
-        Measured sf10 (interleaved): see OPTIMIZATION_r16.md.
+        Gate: footer stats certify the fact ≥ 1M rows (below that the
+        stock semi/anti joins are already cheap);
+        ``SPARK_GRAFT_NEQ_EXISTS_COLLAPSE=1`` forces, ``=0`` disables.
+        Every shape this does not take (a lone member, no pin member, no
+        ``COUNT(*)``) keeps the stock semi/anti joins. Measured sf10 and
+        sf100 (interleaved): see OPTIMIZATION_r16.md.
         """
         mode = os.environ.get("SPARK_GRAFT_NEQ_EXISTS_COLLAPSE", "")
         if mode == "0" or node.where is None or not node.relations:
@@ -6097,7 +5969,7 @@ class Compiler:
             return None
 
         # ---- all members must target ONE outer self-table ref on the
-        # same key columns (window-path target detection) ----
+        # same key columns ----
         target: ast.TableRef | None = None
         keys: list[str] = []
         sname: str | None = None
@@ -6312,14 +6184,12 @@ class Compiler:
         # ---- build the collapsed frame ----
         saved_semi = getattr(self, "_semi_plan", {})
         saved_bcast = getattr(self, "_bcast_hints", {})
-        saved_nxw = getattr(self, "_nx_window_plan", {})
-        self._semi_plan, self._bcast_hints, self._nx_window_plan = {}, {}, {}
+        self._semi_plan, self._bcast_hints = {}, {}
         try:
             rdf, rinfos = self._compile_relation(target, [])
         finally:
             self._semi_plan = saved_semi
             self._bcast_hints = saved_bcast
-            self._nx_window_plan = saved_nxw
         bscope = Scope(rinfos)
 
         def bcol(name: str) -> Column:
@@ -6346,13 +6216,11 @@ class Compiler:
         # ONE aggregate over the key: no distinct-supplier counts needed —
         # "exactly one property-p supplier" is mn_p = mx_p (min/max ignore
         # NULL s), "some OTHER property-i supplier than s0" is
-        # mn_i non-null ∧ (mn_i ≠ s0 ∨ mx_i ≠ s0), the same row-level
-        # conditional min/max test _apply_neq_exists_agg uses. (A two-level
+        # mn_i non-null ∧ (mn_i ≠ s0 ∨ mx_i ≠ s0). (A two-level
         # (key,s)-then-key variant was measured and REJECTED: the (key,s)
         # level barely collapses — ~55M pairs over 60M rows at sf10 — and
-        # its hash tables doubled the aggregate cost; sf10 interleaved
-        # 24.6 s vs the window's 14.4 s. This single-level form has
-        # |groups| = NDV(key).)
+        # its hash tables doubled the aggregate cost. This single-level
+        # form has |groups| = NDV(key).)
         n = next(self._tmp_counter)
         scol_raw = bcol(sname)
         proj_cols = [bcol(k).alias(k) for k in keys] \
@@ -6369,9 +6237,8 @@ class Compiler:
         proj = proj.filter(knn)
         tdf = self.catalog.get(target.name).df
         if not self._bucketed_on(tdf, keys):
-            # raw-row repartition mirrors _apply_neq_exists_agg's
-            # near-unique-key reasoning: |groups| ≈ rows/4 here, a
-            # map-side partial hash build buys little
+            # near-unique keys (|groups| ≈ rows/4 here): shuffle the raw
+            # rows, a map-side partial hash build buys little
             proj = proj.repartition(*[F.col(_bq(k)) for k in keys])
 
         scol = F.col(_bq(sname))
@@ -6443,172 +6310,6 @@ class Compiler:
             limit=node.limit, offset=node.offset,
         )
 
-    # --------------------------------------- <>-EXISTS window self-rewrite
-
-    def _plan_neq_exists_window(
-        self, node: ast.SelectNode
-    ) -> tuple[dict[int, list[dict]], dict[int, dict]]:
-        """Plan the SELF-TABLE refinement of the <>-EXISTS aggregate
-        rewrite (``_apply_neq_exists_agg``): when the EXISTS inner table
-        is the SAME catalog table as an outer FROM relation and the
-        correlation equi-key is the same column of that table
-        (``EXISTS (SELECT 1 FROM lineitem l2 WHERE l2.l_orderkey =
-        l1.l_orderkey AND l2.l_suppkey <> l1.l_suppkey)`` — the TPC-H q21
-        shape), the per-key count/min/max aggregates are computed as
-        conditional WINDOW aggregates over the outer scan itself,
-        partitioned by the key. The inner group {t : t.k = outer.k} is
-        then exactly the window partition, so the rewrite needs NO second
-        scan, NO aggregate, and NO join: the whole EXISTS family costs
-        one exchange of the fact (the window's), which the downstream
-        equi-joins on the same key reuse (HashPartitioning survives the
-        window). vs the agg-join path this deletes one full fact scan,
-        one fact exchange (the outer's side of the shuffled hash join)
-        and a many-group hash build; the window's per-partition sort
-        replaces the aggregate's hash table and spills gracefully at any
-        scale. Soundness notes:
-
-        * the window attaches to the RAW scan in ``_compile_relation``,
-          BEFORE the outer query's own filters and joins — Catalyst only
-          pushes predicates through a Window when they reference just
-          the partition keys (removing whole groups is group-preserving
-          for the rest), so the aggregate always sees every table row;
-        * rows with a NULL key hash into the NULL window partition, but
-          the emitted filter guards ``outer_k IS NOT NULL`` (the inner
-          ``t.k = outer.k`` predicate can never be satisfied), matching
-          the join-path semantics where a NULL key finds no match;
-        * under outer joins the null-extended side carries NULL window
-          columns → ``coalesce(cnt,0)=0`` → EXISTS false, which is
-          correct for a NULL correlation key;
-        * bails when the outer relation is the target of a planned
-          semi/keyset reduction (the reduction would drop rows BELOW
-          the window and corrupt the aggregate) and when any outer FROM
-          relation is not a plain catalog TableRef (pseudo-scope
-          resolution would be incomplete).
-
-        Gate mirrors the agg path: automatic when footer stats certify
-        the table ≥ 1M rows; ``SPARK_GRAFT_NEQ_EXISTS_WINDOW=1`` forces,
-        ``=0`` disables (falling back to the agg-join rewrite).
-
-        Returns ``(by_rel, filters)``: ``by_rel`` maps ``id(outer
-        TableRef)`` → window groups to attach in ``_compile_relation``;
-        ``filters`` maps ``id(ExistsSubquery)`` → the spec consumed in
-        ``_apply_where`` (values keep the node reference alive so a
-        recycled id can never falsely match — same discipline as the
-        keyset cache).
-        """
-        mode = os.environ.get("SPARK_GRAFT_NEQ_EXISTS_WINDOW", "")
-        if mode == "0" or node.where is None or not node.relations:
-            return {}, {}
-
-        outer_refs: list[ast.TableRef] = []
-
-        def flatten(rel: ast.Relation) -> bool:
-            if isinstance(rel, ast.TableRef):
-                if rel.name.lower() in self._cte_frames:
-                    return False
-                outer_refs.append(rel)
-                return True
-            if isinstance(rel, ast.Join):
-                return flatten(rel.left) and flatten(rel.right)
-            return False
-
-        for r in node.relations:
-            if not flatten(r):
-                return {}, {}
-
-        infos: list[tuple[ast.TableRef, RelationInfo, str]] = []
-        for rel in outer_refs:
-            try:
-                entry = self.catalog.get(rel.name)
-            except Exception:
-                return {}, {}
-            info = RelationInfo(
-                qualifier=f"__nxwp_{next(self._rel_counter)}",
-                display=(rel.alias or entry.name),
-                columns=[f.name for f in entry.df.schema.fields],
-                types={f.name: f.dataType for f in entry.df.schema.fields})
-            infos.append((rel, info, rel.name.lower()))
-        pscope = Scope([i for _, i, _ in infos])
-        by_info = {id(i): (rel, tname) for rel, i, tname in infos}
-
-        by_rel: dict[int, dict[tuple, dict]] = {}
-        filters: dict[int, dict] = {}
-        for conjunct in self._split_conjuncts(node.where):
-            negated = False
-            sub = conjunct
-            while isinstance(sub, ast.UnaryOp) and sub.op == "not" \
-                    and isinstance(sub.operand,
-                                   (ast.InSubquery, ast.ExistsSubquery)):
-                negated = not negated
-                sub = sub.operand
-            if not isinstance(sub, ast.ExistsSubquery):
-                continue
-            try:
-                spec = self._neq_exists_spec(sub.subquery, pscope)
-            except (AmbiguousColumnException, ColumnNotFoundError):
-                continue
-            if spec is None:
-                continue
-            if mode != "1" and (spec["stats_rows"] is None
-                                or spec["stats_rows"] < 1_000_000):
-                continue
-            target: ast.TableRef | None = None
-            keys: list[str] = []
-            ok = True
-            for c, o in spec["eq"]:
-                if not isinstance(o, ast.ColumnRef):
-                    ok = False
-                    break
-                try:
-                    rinfo, true = pscope.resolve(o.name, o.table)
-                except (AmbiguousColumnException, ColumnNotFoundError):
-                    ok = False
-                    break
-                owner = by_info.get(id(rinfo))
-                if owner is None or owner[1] != spec["rel"].name.lower() \
-                        or true.lower() != c.lower():
-                    ok = False
-                    break
-                if target is None:
-                    target = owner[0]
-                elif target is not owner[0]:
-                    ok = False
-                    break
-                keys.append(true)
-            if not ok or target is None:
-                continue
-            if id(target) in getattr(self, "_semi_plan", {}):
-                continue  # reduction below the window would drop rows
-            tdf = self.catalog.get(target.name).df
-            if mode != "1" and self._bucketed_on(tdf, keys):
-                # bucketed-on-key layout → agg-join path, ALWAYS: it
-                # rides the buckets (partition-local groupBy +
-                # co-located join, zero exchanges) and its hash
-                # aggregate scales linearly in rows-per-bucket, while
-                # WindowExec's per-GROUP row buffering degrades
-                # super-linearly as buckets grow (measured q21:
-                # sf10 window 1.78 s vs agg 2.21 s — window's only win,
-                # marginal; sf100 window 87.5 s vs agg 17.0 s, 5×, both
-                # zero-spill). On the NON-bucketed layout the window
-                # stays the default: it saves a full fact scan and one
-                # exchange, and wins at every measured SF there
-                # (sf10 4.2 vs 4.3 s; sf100 64 s vs 98 s).
-                continue
-            n = next(self._tmp_counter)
-            names = tuple(f"__nxw_{n}_{t}" for t in ("mn", "mx"))
-            gkey = tuple(sorted(k.lower() for k in keys))
-            group = by_rel.setdefault(id(target), {}).setdefault(
-                gkey, {"keys": keys, "members": []})
-            group["members"].append(
-                {"s": spec["neq"][0], "local": spec["local"],
-                 "names": names})
-            filters[id(sub)] = {
-                "node": sub, "names": names,
-                "neq_outer": spec["neq"][1],
-                "eq_outer": [o for _, o in spec["eq"]]}
-        return ({rid: list(groups.values()) for rid, groups in by_rel.items()},
-                filters)
-
     def _bucketed_on(self, df: DataFrame, keys: list[str]) -> bool:
         """True when ``df``'s physical scan already reports
         ``HashPartitioning`` on exactly ``keys`` — i.e. a bucketed table
@@ -6625,93 +6326,6 @@ class Compiler:
         cols = {c.strip().split("#")[0].lower()
                 for c in m.group(1).split(",") if not c.strip().isdigit()}
         return cols == {k.lower() for k in keys}
-
-    def _ordered_on(self, df: DataFrame, keys: list[str]) -> bool:
-        """True when ``df``'s physical scan reports an output ordering
-        whose leading columns are ``keys`` (a sorted bucketed table with
-        one file per bucket; see session.py's
-        bucketedTableScan.outputOrdering note)."""
-        try:
-            o = (df._jdf.queryExecution().sparkPlan()
-                 .outputOrdering().toString())
-        except Exception:
-            return False
-        names = [x.lower() for x in re.findall(r"(\w+)#\d+", o)]
-        want = {k.lower() for k in keys}
-        # prefix-set match is enough for the gate: if the elision doesn't
-        # apply after all, the window plan is still correct, just pays
-        # its sort (the measured-worse-by-0.3s case, not a wrong plan)
-        return set(names[:len(want)]) == want
-
-    def _attach_nx_windows(
-        self, df: DataFrame, wgroups: list[dict]
-    ) -> DataFrame:
-        """Attach the planned <>-EXISTS conditional window aggregates to a
-        base-table scan (see ``_plan_neq_exists_window``). The attached
-        columns use reserved ``__nxw_*`` names and are invisible to scope
-        resolution (the caller builds RelationInfo from the original
-        frame); ``_apply_where`` consumes and drops them."""
-        from pyspark.sql.window import Window
-
-        q = f"__nxw_{next(self._rel_counter)}"
-        info = RelationInfo(
-            qualifier=q, display=q, columns=list(df.columns),
-            types={f.name: f.dataType for f in df.schema.fields})
-        iscope = Scope([info])
-        frame = df.alias(q)
-        cols: list[Column] = []
-        for g in wgroups:
-            w = Window.partitionBy(*[info.col(k) for k in g["keys"]])
-            for m in g["members"]:
-                s_col = info.col(info.colmap[m["s"].lower()])
-                cond: Column | None = None
-                for lc in m["local"]:
-                    c = self.compile_expr(lc, iscope)
-                    cond = c if cond is None else (cond & c)
-                val = F.when(cond, s_col) if cond is not None else s_col
-                mn, mx = m["names"]
-                # no count(): "group has a non-null value" is exactly
-                # "min IS NOT NULL", and the NULL-deterministic filter
-                # below encodes it via coalesce — two window functions
-                # per member instead of three
-                cols += [F.min(val).over(w).alias(mn),
-                         F.max(val).over(w).alias(mx)]
-        return frame.select("*", *cols)
-
-    def _apply_neq_exists_window_filters(
-        self, df: DataFrame, subq: list[tuple], scope: Scope
-    ) -> tuple[DataFrame, list[tuple], list[str]]:
-        """Consume <>-EXISTS conjuncts whose aggregates were attached as
-        window columns by ``_plan_neq_exists_window``; emits the same
-        NULL-deterministic filter as the agg-join path plus the
-        ``outer_k IS NOT NULL`` guards (the window partition for a NULL
-        key aggregates OTHER null-key rows, which the join path would
-        never match)."""
-        filters = getattr(self, "_nx_window_filters", {})
-        remaining: list[tuple] = []
-        drop: list[str] = []
-        for node, negated in subq:
-            spec = filters.get(id(node)) \
-                if isinstance(node, ast.ExistsSubquery) else None
-            if spec is None or spec["node"] is not node:
-                remaining.append((node, negated))
-                continue
-            filters.pop(id(node), None)
-            neg = node.negated ^ negated
-            mn, mx = spec["names"]
-            outer_s = self.compile_expr(spec["neq_outer"], scope)
-            # NULL-deterministic: an empty/all-NULL group (or a
-            # null-extended outer row) has NULL mn/mx → the coalesce
-            # pins the comparison to FALSE so NOT EXISTS keeps the row
-            exists_b = (
-                outer_s.isNotNull()
-                & F.coalesce((F.col(_bq(mn)) != outer_s)
-                             | (F.col(_bq(mx)) != outer_s), F.lit(False)))
-            for o in spec["eq_outer"]:
-                exists_b = exists_b & self.compile_expr(o, scope).isNotNull()
-            df = df.filter(~exists_b if neg else exists_b)
-            drop += [mn, mx]
-        return df, remaining, drop
 
     def _correlated_semi_join(
         self,

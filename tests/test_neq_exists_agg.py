@@ -1,151 +1,38 @@
-"""<>-correlated EXISTS aggregate unnesting (TPC-H q21 shape):
-``EXISTS (SELECT 1 FROM t WHERE t.k = o.k AND t.s <> o.s [AND f])``
-rewrites to a per-k min/max aggregate test, and multiple such
-subqueries over the same (table, key) fuse into ONE aggregation pass
-with conditional aggregates — replacing every semi/anti probe of the
-full inner with one hash join against a group-reduced side.
+"""TPC-H q21's <>-correlated EXISTS family under the automatic size gate.
 
-Measured sf10 (interleaved A/B): q21 5.94 → 4.61 s (−22%).
-Gate: automatic at inner ≥ 1M footer rows; SPARK_GRAFT_NEQ_EXISTS_AGG
-forces (=1) / disables (=0). Every test compares against the stock
-plan and (where planted) DuckDB.
+The pinned group collapse (``_try_neq_exists_collapse``) is the only
+rewrite of this shape: one per-key aggregate over lineitem answers both
+subqueries. Below 1M footer rows the gate stays closed and q21 keeps the
+stock semi/anti joins; above it the collapse takes q21 with no env
+switch set. Both plans must agree with each other and with DuckDB.
 """
 
 from __future__ import annotations
 
-import pandas as pd
-import pytest
-
 from tests.conftest import compare_frames
-
-Q21 = """
-    SELECT s_name, count(*) AS numwait
-    FROM supplier s
-    JOIN lineitem l1 ON s.s_suppkey = l1.l_suppkey
-    JOIN orders o ON o.o_orderkey = l1.l_orderkey
-    WHERE o.o_orderstatus = 'F' AND l1.l_returnflag = 'R'
-    AND EXISTS (SELECT 1 FROM lineitem l2
-                WHERE l2.l_orderkey = l1.l_orderkey
-                AND l2.l_suppkey <> l1.l_suppkey)
-    AND NOT EXISTS (SELECT 1 FROM lineitem l3
-                    WHERE l3.l_orderkey = l1.l_orderkey
-                    AND l3.l_suppkey <> l1.l_suppkey
-                    AND l3.l_returnflag = 'R')
-    GROUP BY s_name ORDER BY numwait DESC, s_name
-"""
+from tests.test_nxc_collapse import Q21, _inflated_engine, _opt
 
 
-def _opt(df) -> str:
-    return df._jdf.queryExecution().optimizedPlan().toString()
+def test_q21_forced_matches_stock_and_oracle(spark, ddb, monkeypatch):
+    # ≥10M-row stats force the gate open under the default env
+    monkeypatch.delenv("SPARK_GRAFT_NEQ_EXISTS_COLLAPSE", raising=False)
+    eng = _inflated_engine(spark)
+    df = eng.query(Q21)
+    plan = _opt(df)
+    assert "__nxc_" in plan, plan
+    assert "LeftSemi" not in plan and "LeftAnti" not in plan, plan
+    monkeypatch.setenv("SPARK_GRAFT_NEQ_EXISTS_COLLAPSE", "0")
+    stock = eng.query(Q21)
+    assert "__nxc_" not in _opt(stock)
+    got = df.toPandas()
+    compare_frames(got, stock.toPandas(), ordered=True)
+    compare_frames(got, ddb.execute(Q21).fetchdf(), ordered=True)
 
 
-def test_q21_forced_matches_stock_and_oracle(engine, ddb, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_NEQ_EXISTS_AGG", "0")
-    stock = engine.query(Q21).toPandas()
-    monkeypatch.setenv("SPARK_GRAFT_NEQ_EXISTS_AGG", "1")
+def test_gate_closed_at_test_scale(engine, ddb, monkeypatch):
+    monkeypatch.delenv("SPARK_GRAFT_NEQ_EXISTS_COLLAPSE", raising=False)
     df = engine.query(Q21)
     plan = _opt(df)
-    # both probes gone: no semi/anti join remains, ONE fused aggregate
-    assert "LeftSemi" not in plan and "LeftAnti" not in plan, plan
-    assert "__nxk_" in plan
-    compare_frames(df.toPandas(), stock, ordered=True)
-    compare_frames(df.toPandas(), ddb.execute(Q21).fetchdf(), ordered=True)
-
-
-def test_fusion_single_aggregate_pass(engine, monkeypatch):
-    import re
-
-    monkeypatch.setenv("SPARK_GRAFT_NEQ_EXISTS_AGG", "1")
-    plan = _opt(engine.query(Q21))
-    # the two subqueries share one groupBy: exactly one key-name family
-    fams = {m.group(1) for m in re.finditer(r"__nxk_(\d+)_", plan)}
-    assert len(fams) == 1, plan
-    # and one lineitem-aggregate subtree feeding both filters: the two
-    # conditional count/min/max triples live in the SAME Aggregate node
-    aggs = [ln for ln in plan.splitlines()
-            if "Aggregate [" in ln and "__nxk_" in ln]
-    assert len(aggs) == 1, plan
-
-
-def test_gate_closed_at_test_scale(engine, monkeypatch):
-    monkeypatch.delenv("SPARK_GRAFT_NEQ_EXISTS_AGG", raising=False)
-    plan = _opt(engine.query(Q21))
-    assert "__nxk_" not in plan, plan
+    assert "__nxc_" not in plan, plan
     assert "LeftSemi" in plan and "LeftAnti" in plan, plan
-
-
-@pytest.mark.parametrize("sql", [
-    # two <>-conjuncts: not this rewrite
-    """SELECT count(*) AS n FROM lineitem l1 WHERE EXISTS
-       (SELECT 1 FROM lineitem l2 WHERE l2.l_orderkey = l1.l_orderkey
-        AND l2.l_suppkey <> l1.l_suppkey
-        AND l2.l_partkey <> l1.l_partkey)""",
-    # no equality correlation: not this rewrite
-    """SELECT count(*) AS n FROM lineitem l1 WHERE EXISTS
-       (SELECT 1 FROM lineitem l2
-        WHERE l2.l_suppkey <> l1.l_suppkey AND l2.l_orderkey < 10)""",
-    # correlated range conjunct alongside: not this rewrite
-    """SELECT count(*) AS n FROM lineitem l1 WHERE EXISTS
-       (SELECT 1 FROM lineitem l2 WHERE l2.l_orderkey = l1.l_orderkey
-        AND l2.l_suppkey <> l1.l_suppkey
-        AND l2.l_quantity > l1.l_quantity)""",
-])
-def test_non_candidates_fall_through_unchanged(engine, monkeypatch, sql):
-    monkeypatch.setenv("SPARK_GRAFT_NEQ_EXISTS_AGG", "1")
-    df = engine.query(sql)
-    assert "__nxk_" not in _opt(df)
-    forced = df.toPandas()
-    monkeypatch.setenv("SPARK_GRAFT_NEQ_EXISTS_AGG", "0")
-    compare_frames(engine.query(sql).toPandas(), forced)
-
-
-def test_null_semantics_standard(spark, monkeypatch):
-    # NULL s on both sides, empty groups, all-NULL groups — <> is
-    # NULL-rejecting, so a NULL outer.s or an all-NULL group means
-    # EXISTS is FALSE (standard three-valued logic; verified against
-    # the row-level filter semantics both engines agree on). NOTE:
-    # DuckDB 1.0.0's unnested correlated EXISTS diverges here — it
-    # returns TRUE for `i.s <> o.s` when o.s IS NULL, contradicting its
-    # own row-level `WHERE i.s <> NULL` (zero rows) — so the
-    # expectation below is hand-computed standard SQL, and the rewrite
-    # is additionally pinned equal to the stock semi-join path.
-    from sql_to_ibis_spark import SqlEngine
-
-    outer = pd.DataFrame({
-        "k": [1, 1, 2, 3, 4, 5],
-        "s": [10, 20, 10, None, 10, 10],
-    }).astype({"k": "int64", "s": "Int64"})
-    inner = pd.DataFrame({
-        "k": [1, 1, 2, 3, 3, 5],
-        "s": [10, 30, 10, None, 40, None],
-    }).astype({"k": "int64", "s": "Int64"})
-    # groups: k=1 {10,30}, k=2 {10}, k=3 {NULL,40}, k=5 {NULL}; k=4 absent
-    # exists(o) = o.s NOT NULL and group has a non-null value != o.s
-    exists_rows = {(1, 10), (1, 20)}        # k=3 o.s NULL -> false
-    all_rows = {(1, 10), (1, 20), (2, 10), (3, None), (4, 10), (5, 10)}
-    eng = SqlEngine(spark)
-    eng.register_temp_table(spark.createDataFrame(outer), "t_out")
-    eng.register_temp_table(spark.createDataFrame(inner), "t_in")
-    for neg, want in (("", exists_rows), ("NOT ", all_rows - exists_rows)):
-        sql = (f"SELECT o.k, o.s FROM t_out o WHERE {neg}EXISTS "
-               f"(SELECT 1 FROM t_in i WHERE i.k = o.k AND i.s <> o.s)")
-        for mode in ("0", "1"):
-            monkeypatch.setenv("SPARK_GRAFT_NEQ_EXISTS_AGG", mode)
-            got = {(r.k, r.s) for r in eng.query(sql).collect()}
-            assert got == want, (neg, mode, got, want)
-
-
-def test_local_filter_and_reversed_sides(engine, ddb, monkeypatch):
-    # inner filter + the <> written outer-first: still eligible
-    sql = """
-        SELECT count(*) AS n FROM lineitem l1
-        WHERE l1.l_returnflag = 'R'
-        AND EXISTS (SELECT 1 FROM lineitem l2
-                    WHERE l1.l_orderkey = l2.l_orderkey
-                    AND l1.l_suppkey <> l2.l_suppkey
-                    AND l2.l_quantity > 25)
-    """
-    monkeypatch.setenv("SPARK_GRAFT_NEQ_EXISTS_AGG", "1")
-    df = engine.query(sql)
-    assert "__nxk_" in _opt(df)
-    compare_frames(df.toPandas(), ddb.execute(sql).fetchdf())
+    compare_frames(df.toPandas(), ddb.execute(Q21).fetchdf(), ordered=True)

@@ -1,245 +1,40 @@
-"""Self-table window refinement of the <>-EXISTS rewrite (TPC-H q21):
-when the EXISTS inner table IS the outer FROM table and the correlation
-key is the same column, the fused per-key count/min/max aggregates
-attach as conditional WINDOW aggregates over the outer scan itself —
-one fact scan, one exchange (the window's), no join. Falls back to the
-agg-join rewrite (``_apply_neq_exists_agg``) for every other shape.
+"""TPC-H q21's <>-correlated EXISTS family never plans a Window.
 
-Gate: automatic at ≥ 1M footer rows; SPARK_GRAFT_NEQ_EXISTS_WINDOW
-forces (=1) / disables (=0). Every test compares against the stock
-semi/anti plan and (where applicable) DuckDB.
+The collapse answers both subqueries with one hash aggregate keyed on
+l_orderkey and the stock plan uses semi/anti joins, so no plan of q21
+sorts the fact for a window. These pin that under the default env at
+both scales, and that the stock joins still match DuckDB when every
+other ≥1M-row gate is open.
 """
 
 from __future__ import annotations
 
-import pandas as pd
-import pytest
-
 from tests.conftest import compare_frames
-
-Q21 = """
-    SELECT s_name, count(*) AS numwait
-    FROM supplier s
-    JOIN lineitem l1 ON s.s_suppkey = l1.l_suppkey
-    JOIN orders o ON o.o_orderkey = l1.l_orderkey
-    WHERE o.o_orderstatus = 'F' AND l1.l_returnflag = 'R'
-    AND EXISTS (SELECT 1 FROM lineitem l2
-                WHERE l2.l_orderkey = l1.l_orderkey
-                AND l2.l_suppkey <> l1.l_suppkey)
-    AND NOT EXISTS (SELECT 1 FROM lineitem l3
-                    WHERE l3.l_orderkey = l1.l_orderkey
-                    AND l3.l_suppkey <> l1.l_suppkey
-                    AND l3.l_returnflag = 'R')
-    GROUP BY s_name ORDER BY numwait DESC, s_name
-"""
+from tests.test_nxc_collapse import Q21, _inflated_engine, _opt, _phys
 
 
-def _opt(df) -> str:
-    return df._jdf.queryExecution().optimizedPlan().toString()
-
-
-def _phys(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
-def test_q21_window_matches_stock_and_oracle(engine, ddb, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_NEQ_EXISTS_WINDOW", "0")
-    monkeypatch.setenv("SPARK_GRAFT_NEQ_EXISTS_AGG", "0")
-    stock = engine.query(Q21).toPandas()
-    monkeypatch.setenv("SPARK_GRAFT_NEQ_EXISTS_WINDOW", "1")
-    df = engine.query(Q21)
+def test_q21_window_matches_stock_and_oracle(spark, ddb, monkeypatch):
+    # ≥10M-row stats with the collapse switched off: the stock
+    # semi/anti joins, planned beside every other open size gate
+    monkeypatch.setenv("SPARK_GRAFT_NEQ_EXISTS_COLLAPSE", "0")
+    df = _inflated_engine(spark).query(Q21)
     plan = _opt(df)
-    # no probe joins and no agg-join either: the window consumed both
-    assert "LeftSemi" not in plan and "LeftAnti" not in plan, plan
-    assert "__nxw_" in plan and "__nxk_" not in plan, plan
-    compare_frames(df.toPandas(), stock, ordered=True)
+    assert "LeftSemi" in plan and "LeftAnti" in plan, plan
+    assert "Window" not in _phys(df)
     compare_frames(df.toPandas(), ddb.execute(Q21).fetchdf(), ordered=True)
 
 
-def test_q21_window_plan_single_fact_scan(engine, monkeypatch):
-    # the whole EXISTS family costs ONE lineitem scan and ONE window
-    # (both subqueries fuse into the same partitionBy(l_orderkey) spec)
-    monkeypatch.setenv("SPARK_GRAFT_NEQ_EXISTS_WINDOW", "1")
-    phys = _phys(engine.query(Q21))
+def test_q21_window_plan_single_fact_scan(spark, monkeypatch):
+    # above the gate the whole EXISTS family costs ONE lineitem scan
+    monkeypatch.delenv("SPARK_GRAFT_NEQ_EXISTS_COLLAPSE", raising=False)
+    phys = _phys(_inflated_engine(spark).query(Q21))
     assert phys.count("lineitem.parquet") == 1, phys
-    assert phys.count("Window") == 1, phys
+    assert "Window" not in phys, phys
 
 
 def test_window_gate_closed_at_test_scale(engine, monkeypatch):
-    monkeypatch.delenv("SPARK_GRAFT_NEQ_EXISTS_WINDOW", raising=False)
-    monkeypatch.delenv("SPARK_GRAFT_NEQ_EXISTS_AGG", raising=False)
-    plan = _opt(engine.query(Q21))
-    assert "__nxw_" not in plan, plan
-    assert "LeftSemi" in plan and "LeftAnti" in plan, plan
-
-
-def test_null_semantics_self_table(spark, monkeypatch):
-    # the window-partition NULL-key hazard: rows with a NULL key hash
-    # into ONE window partition and would see each other's s values —
-    # the emitted `outer_k IS NOT NULL` guard must kill them (standard
-    # semantics: `i.k = o.k` is never satisfied for NULL o.k). NULL s
-    # and all-NULL groups follow the same three-valued logic as the
-    # agg-join path. Expectation is hand-computed standard SQL; all
-    # three plans (stock, agg-join, window) must agree.
-    from sql_to_ibis_spark import SqlEngine
-
-    t = pd.DataFrame({
-        "k": [1, 1, 2, 3, 3, 5, None, None],
-        "s": [10, 30, 10, None, 40, None, 7, 8],
-    }).astype({"k": "Int64", "s": "Int64"})
-    # groups: k=1 {10,30}, k=2 {10}, k=3 {NULL,40}, k=5 {NULL}
-    # exists(o) = o.k NOT NULL, o.s NOT NULL, group has non-null != o.s
-    exists_rows = {(1, 10), (1, 30)}
-    all_rows = {(1, 10), (1, 30), (2, 10), (3, None), (3, 40),
-                (5, None), (None, 7), (None, 8)}
-    eng = SqlEngine(spark)
-    eng.register_temp_table(spark.createDataFrame(t), "t_self")
-    for neg, want in (("", exists_rows), ("NOT ", all_rows - exists_rows)):
-        sql = (f"SELECT o.k, o.s FROM t_self o WHERE {neg}EXISTS "
-               f"(SELECT 1 FROM t_self i WHERE i.k = o.k AND i.s <> o.s)")
-        got = {}
-        for var, mode in (("SPARK_GRAFT_NEQ_EXISTS_WINDOW", "0"),
-                          ("SPARK_GRAFT_NEQ_EXISTS_AGG", "1"),
-                          ("SPARK_GRAFT_NEQ_EXISTS_WINDOW", "1")):
-            monkeypatch.setenv(var, mode)
-            got[(var, mode)] = {(r.k, r.s) for r in eng.query(sql).collect()}
-            monkeypatch.delenv(var, raising=False)
-        for key, rows in got.items():
-            assert rows == want, (neg, key, rows, want)
-
-
-@pytest.mark.parametrize("sql", [
-    # correlation key names differ (l_partkey vs l_orderkey): the window
-    # partition would group by the wrong column — must NOT window
-    """SELECT count(*) AS n FROM lineitem l1 WHERE EXISTS
-       (SELECT 1 FROM lineitem l2 WHERE l2.l_partkey = l1.l_orderkey
-        AND l2.l_suppkey <> l1.l_suppkey)""",
-    # inner table differs from every outer table: agg-join territory
-    """SELECT count(*) AS n FROM orders o1 WHERE EXISTS
-       (SELECT 1 FROM lineitem l2 WHERE l2.l_orderkey = o1.o_orderkey
-        AND l2.l_suppkey <> o1.o_custkey)""",
-])
-def test_window_non_candidates_fall_through(engine, monkeypatch, sql):
-    monkeypatch.setenv("SPARK_GRAFT_NEQ_EXISTS_WINDOW", "1")
-    df = engine.query(sql)
-    assert "__nxw_" not in _opt(df)
-    forced = df.toPandas()
-    monkeypatch.setenv("SPARK_GRAFT_NEQ_EXISTS_WINDOW", "0")
-    compare_frames(engine.query(sql).toPandas(), forced)
-
-
-def test_window_under_left_join_null_extension(engine, ddb, monkeypatch):
-    # the windowed relation sits on the null-extended side of a LEFT
-    # JOIN: null-extended rows carry NULL window columns → EXISTS false,
-    # NOT EXISTS true — same as a NULL correlation key. Pin vs stock
-    # and DuckDB.
-    sql = """
-        SELECT o.o_orderkey, count(*) AS n
-        FROM orders o LEFT JOIN lineitem l1
-          ON o.o_orderkey = l1.l_orderkey AND l1.l_quantity > 49
-        WHERE NOT EXISTS (SELECT 1 FROM lineitem l2
-                          WHERE l2.l_orderkey = l1.l_orderkey
-                          AND l2.l_suppkey <> l1.l_suppkey)
-        GROUP BY o.o_orderkey ORDER BY o.o_orderkey LIMIT 20
-    """
-    monkeypatch.setenv("SPARK_GRAFT_NEQ_EXISTS_WINDOW", "1")
-    df = engine.query(sql)
-    assert "__nxw_" in _opt(df)
-    forced = df.toPandas()
-    monkeypatch.setenv("SPARK_GRAFT_NEQ_EXISTS_WINDOW", "0")
-    monkeypatch.setenv("SPARK_GRAFT_NEQ_EXISTS_AGG", "0")
-    compare_frames(forced, engine.query(sql).toPandas(), ordered=True)
-    compare_frames(forced, ddb.execute(sql).fetchdf(), ordered=True)
-
-
-def test_window_local_filter_and_outer_expr(engine, ddb, monkeypatch):
-    # inner local filter becomes a conditional window aggregate; the
-    # <> outer side referencing ANOTHER relation (s.s_suppkey) is fine —
-    # only the equi-key must be the self-table column
-    sql = """
-        SELECT count(*) AS n
-        FROM supplier s JOIN lineitem l1 ON s.s_suppkey = l1.l_suppkey
-        WHERE EXISTS (SELECT 1 FROM lineitem l2
-                      WHERE l2.l_orderkey = l1.l_orderkey
-                      AND l2.l_suppkey <> s.s_suppkey
-                      AND l2.l_quantity > 25)
-    """
-    monkeypatch.setenv("SPARK_GRAFT_NEQ_EXISTS_WINDOW", "1")
-    df = engine.query(sql)
-    assert "__nxw_" in _opt(df)
-    compare_frames(df.toPandas(), ddb.execute(sql).fetchdf())
-    monkeypatch.setenv("SPARK_GRAFT_NEQ_EXISTS_WINDOW", "0")
-    compare_frames(engine.query(sql).toPandas(),
-                   ddb.execute(sql).fetchdf())
-
-
-def test_bucketed_on_key_prefers_agg_path(spark, monkeypatch):
-    # r16: the pinned group collapse outranks both paths when eligible;
-    # disable it here — this test pins the WINDOW-vs-AGG choice
-    monkeypatch.setenv("SPARK_GRAFT_NEQ_EXISTS_COLLAPSE", "0")
-    # a lineitem snapshot bucketed on the correlation key reports
-    # HashPartitioning(l_orderkey) at the scan: the agg-join path rides
-    # the buckets with ZERO exchanges (partition-local groupBy +
-    # co-located join) while WindowExec buffering would only add cost —
-    # the auto gate must pick agg, not window (measured sf10:
-    # bucketed+agg 2.66 s vs bucketed+window 2.97 s interleaved)
-    from tests.conftest import SF_DIR
-    from sql_to_ibis_spark import SqlEngine
-
-    eng = SqlEngine(spark)
-    eng.register_dir(SF_DIR)
-    eng.snapshot_bucketed("lineitem", ["l_orderkey"], num_buckets=4)
-    eng.analyze()
-    for name in eng.catalog.names():
-        st = eng.catalog.get(name).stats
-        if st is not None:
-            st.rows = max(st.rows, 10_000_000)
-    plan = _opt(eng.query(Q21))
-    assert "__nxw_" not in plan, plan
-    assert "__nxk_" in plan, plan
-
-
-def test_sorted_bucketed_also_prefers_agg_path(spark, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_NEQ_EXISTS_COLLAPSE", "0")
-    # SORTED buckets elide the window's sort (scan-reported ordering),
-    # but WindowExec's per-GROUP buffering still degrades super-linearly
-    # with rows-per-bucket — measured q21: sf10 window 1.78 s vs agg
-    # 2.21 s (window's only, marginal win) but sf100 window 87.5 s vs
-    # agg 17.0 s. The gate therefore picks the agg path for ANY
-    # bucketed-on-key layout, sorted or not.
-    from tests.conftest import SF_DIR
-    from sql_to_ibis_spark import SqlEngine
-
-    eng = SqlEngine(spark)
-    eng.register_dir(SF_DIR)
-    eng.snapshot_bucketed("lineitem", ["l_orderkey"], num_buckets=4,
-                          sort_cols=["l_orderkey"])
-    eng.analyze()
-    for name in eng.catalog.names():
-        st = eng.catalog.get(name).stats
-        if st is not None:
-            st.rows = max(st.rows, 10_000_000)
-    plan = _opt(eng.query(Q21))
-    assert "__nxw_" not in plan and "__nxk_" in plan, plan
-
-
-def test_forced_window_on_sorted_bucket_elides_sort(spark, monkeypatch):
-    # the sort-elision capability itself stays pinned: FORCING the
-    # window over a sorted one-file-per-bucket snapshot plans with the
-    # Window directly on the scan — no Sort child, and the only hash
-    # exchange left is the final aggregation
-    from tests.conftest import SF_DIR
-    from sql_to_ibis_spark import SqlEngine
-
-    monkeypatch.setenv("SPARK_GRAFT_NEQ_EXISTS_WINDOW", "1")
-    eng = SqlEngine(spark)
-    eng.register_dir(SF_DIR)
-    eng.snapshot_bucketed("lineitem", ["l_orderkey"], num_buckets=4,
-                          sort_cols=["l_orderkey"])
-    df = eng.query(Q21)
-    assert "__nxw_" in _opt(df)
-    phys = _phys(df)
-    lines = phys.splitlines()
-    widx = next(i for i, ln in enumerate(lines) if "Window" in ln)
-    assert "Sort" not in lines[widx + 1], phys
-    assert phys.count("Exchange hashpartitioning") <= 1, phys
+    # below the gate: one lineitem scan per probe, still no window
+    monkeypatch.delenv("SPARK_GRAFT_NEQ_EXISTS_COLLAPSE", raising=False)
+    phys = _phys(engine.query(Q21))
+    assert phys.count("lineitem.parquet") == 3, phys
+    assert "Window" not in phys, phys

@@ -66,6 +66,46 @@ def test_minhash_est_jaccard_close_to_exact(docs):
         assert abs(r["est_jaccard"] - r["jaccard"]) < 0.35  # 64-perm estimate
 
 
+def test_minhash_sig_frame_matches_pandas_reference(spark):
+    # the mapInArrow signature stage against the pandas UDF behind
+    # minhash_signature, row for row; one partition so NULL and empty
+    # text share an Arrow batch with ordinary documents
+    rows = [(1, "the quick brown fox jumps over the lazy dog"), (2, None),
+            (3, ""), (4, "a b"), (5, None),
+            (6, "one two three four five six seven eight")]
+    df = spark.createDataFrame(rows, "doc_id long, text string").coalesce(1)
+    ref = {r.doc_id: r.sig for r in df.select(
+        "doc_id", dedup.minhash_signature(F.col("text")).alias("sig"))
+        .collect()}
+    got = {r.id: r.sig for r in dedup._minhash_sig_frame(
+        df, "doc_id", dedup._token_hashes(F.col("text")), 64, 5).collect()}
+    assert got == ref
+    assert ref[2] is None and ref[5] is None and len(ref[3]) == 64
+
+
+@pytest.mark.parametrize("start", [0, 1])
+def test_minhash_sig_list_array_null_slots_with_values(start):
+    # Arrow only promises monotonic offsets under null slots: here both
+    # null slots cover values, which must not leak into the neighbours
+    import numpy as np
+    import pandas as pd
+    import pyarrow as pa
+
+    vals = pa.array(np.arange(1, 31, dtype=np.int64) * 7919)
+    th = pa.ListArray.from_arrays(
+        pa.array([0, 3, 9, 15, 16, 22, 30], type=pa.int32()), vals,
+        mask=pa.array([False, True, False, False, True, False]))
+    th = th.slice(start)
+    params = dedup._minhash_params(64)
+    a_all = np.array([a for a, _ in params], dtype=np.int64)
+    b_all = np.array([b for _, b in params], dtype=np.int64)
+    got = dedup._sig_list_array(th, a_all, b_all, 64, 5).to_pylist()
+    ref = dedup._minhash_sig_udf(64, 5).func(pd.Series(th.to_pylist()))
+    assert len(got) == len(ref)
+    for g, r in zip(got, ref):
+        assert (g is None and r is None) or g == list(r), (g, r)
+
+
 def test_simhash_near_dup_low_hamming(spark):
     base = ("one two three four five six seven eight nine ten eleven twelve "
             "thirteen fourteen fifteen sixteen")

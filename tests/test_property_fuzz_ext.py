@@ -178,9 +178,7 @@ GATE_VARS = ("SPARK_GRAFT_SEMI_BUILD_KEYSET",
              "SPARK_GRAFT_EXISTS_DEDUP_REWRITE",
              "SPARK_GRAFT_SINGLE_REL_MAGIC",
              "SPARK_GRAFT_EAGER_AGG",
-             "SPARK_GRAFT_IN_KEYSET_REDUCTION",
-             "SPARK_GRAFT_NEQ_EXISTS_AGG",
-             "SPARK_GRAFT_NEQ_EXISTS_WINDOW")
+             "SPARK_GRAFT_IN_KEYSET_REDUCTION")
 
 
 @given(
@@ -204,21 +202,42 @@ def test_random_quantified_forced_gates_match_duckdb(engine, ddb, q, op,
     compare_frames(actual, expected)
 
 
+NXC_FILTERS = ["l_returnflag = 'R'", "l_quantity > 25", "l_linenumber = 1",
+               "l_linestatus = 'F'"]
+
+
 @given(
-    neg=st.booleans(),
-    local=st.sampled_from(["l2.l_quantity > 25", "l2.l_linenumber = 1",
-                           "l2.l_returnflag = 'R'"]),
+    outer=st.lists(st.sampled_from(NXC_FILTERS), min_size=1, max_size=2,
+                   unique=True),
+    local=st.sampled_from(NXC_FILTERS),
 )
 @FUZZ
-def test_random_neq_exists_window_matches_duckdb(engine, ddb, neg, local):
-    # the r12 self-table window rewrite, forced, against DuckDB — random
-    # local inner filters become conditional window aggregates
-    kw = "NOT EXISTS" if neg else "EXISTS"
-    sql = (f"SELECT count(*) AS n FROM lineitem l1 "
-           f"WHERE l1.l_orderkey < 3000 AND {kw} "
-           f"(SELECT 1 FROM lineitem l2 WHERE l2.l_orderkey = l1.l_orderkey "
-           f"AND l2.l_suppkey <> l1.l_suppkey AND {local})")
-    with _forced_env(SPARK_GRAFT_NEQ_EXISTS_WINDOW="1"):
-        actual = engine.query(sql).toPandas()
+def test_random_neq_exists_collapse_matches_duckdb(engine, ddb, outer,
+                                                   local):
+    # q21 shape with a random outer fact-local filter set and a random
+    # NOT EXISTS local filter, the collapse forced. It takes the query
+    # exactly when the outer filters imply the NOT EXISTS local (the
+    # pin); every other draw keeps the stock semi/anti joins.
+    where = " AND ".join(f"l1.{f}" for f in outer)
+    sql = f"""
+        SELECT s_name, count(*) AS numwait
+        FROM supplier s
+        JOIN lineitem l1 ON s.s_suppkey = l1.l_suppkey
+        JOIN orders o ON o.o_orderkey = l1.l_orderkey
+        WHERE o.o_orderstatus = 'F' AND {where}
+        AND EXISTS (SELECT 1 FROM lineitem l2
+                    WHERE l2.l_orderkey = l1.l_orderkey
+                    AND l2.l_suppkey <> l1.l_suppkey)
+        AND NOT EXISTS (SELECT 1 FROM lineitem l3
+                        WHERE l3.l_orderkey = l1.l_orderkey
+                        AND l3.l_suppkey <> l1.l_suppkey
+                        AND l3.{local})
+        GROUP BY s_name ORDER BY numwait DESC, s_name
+    """
+    with _forced_env(SPARK_GRAFT_NEQ_EXISTS_COLLAPSE="1"):
+        df = engine.query(sql)
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        actual = df.toPandas()
+    assert ("__nxc_" in plan) == (local in outer), plan
     expected = ddb.execute(sql).fetchdf()
-    compare_frames(actual, expected)
+    compare_frames(actual, expected, ordered=True)
