@@ -3,9 +3,11 @@
 Compares, same-session interleaved at a given SF:
   rid     — broadcast tagged outer -> inner join -> dropDuplicates(rid)
             (the shipped default; Catalyst prunes the carried width)
-  keyset  — distinct outer correlation keys -> broadcast inner join ->
-            matched-set broadcast left-semi (SPARK_GRAFT_EXISTS_POSITIVE=keyset)
   stock   — plain shuffled left-semi (SPARK_GRAFT_EXISTS_DEDUP_REWRITE=0)
+
+A third arm, keyset (distinct outer correlation keys -> broadcast inner
+join -> matched-set broadcast left-semi), lost to rid at both widths
+measured below and was deleted from the engine.
 
 Measured r13 at sf10 (local[32], medians of 5-6 interleaved):
   rid 1.15 s | keyset 1.68 s | stock 2.77-3.08 s | DuckDB 0.24-0.30 s
@@ -47,12 +49,8 @@ def main() -> None:
     _execute(qs["select_star"](spark, sf_dir))
 
     modes = {
-        "rid": {"SPARK_GRAFT_EXISTS_DEDUP_REWRITE": "1",
-                "SPARK_GRAFT_EXISTS_POSITIVE": "rid"},
-        "keyset": {"SPARK_GRAFT_EXISTS_DEDUP_REWRITE": "1",
-                   "SPARK_GRAFT_EXISTS_POSITIVE": "keyset"},
-        "stock": {"SPARK_GRAFT_EXISTS_DEDUP_REWRITE": "0",
-                  "SPARK_GRAFT_EXISTS_POSITIVE": "rid"},
+        "rid": {"SPARK_GRAFT_EXISTS_DEDUP_REWRITE": "1"},
+        "stock": {"SPARK_GRAFT_EXISTS_DEDUP_REWRITE": "0"},
     }
 
     def set_mode(env: dict) -> None:

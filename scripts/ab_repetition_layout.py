@@ -2,11 +2,6 @@
 
 Modes, same session interleaved:
   docpart   — shipped default: ONE corpus exchange (repartition doc_id)
-  split     — level-1 n-gram counts exchanged (the "pre-dedup before the
-              corpus exchange" hypothesis: map-side partial aggregation
-              IS the per-partition pre-dedup; measured r11 at 3-5x worse
-              because per-doc-distinct bigram+trigram strings are ~4-5x
-              corpus bytes)
   bucketed  — documents snapshot bucketed on doc_id + plan="nopart":
               the scan reports HashPartitioning(doc_id), so the operator
               plans with ZERO exchanges (the spill-killer for sf100).
@@ -55,7 +50,6 @@ def main() -> None:
 
     runs = {
         "docpart": lambda: text.repetition_signals(docs, plan="docpart"),
-        "split": lambda: text.repetition_signals(docs, plan="split"),
         "bucketed": lambda: text.repetition_signals(bdocs, plan="nopart"),
     }
     # sanity: identical results across modes (sorted row sample hash)

@@ -5,8 +5,6 @@ run at full whole-stage-codegen speed over any corpus size.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -182,7 +180,7 @@ def term_frequencies(
 
 def repetition_signals(df: DataFrame, text_col: str = "text",
                        id_col: str = "doc_id",
-                       plan: str | None = None) -> DataFrame:
+                       plan: str = "docpart") -> DataFrame:
     """Repetition-based quality signals (the Gopher/MassiveText filter
     family, recomputed from the published definitions): per document,
 
@@ -194,17 +192,17 @@ def repetition_signals(df: DataFrame, text_col: str = "text",
     * ``top_bigram`` — the argmax 2-gram itself (ties broken by descending
       lexicographic order so the result is engine-deterministic).
 
-    Scale shape (r11 ``docpart`` plan — default): each source row is a
+    Scale shape (``plan="docpart"``, the default): each source row is a
     WHOLE document, so one ``repartition(doc_id)`` of the raw corpus is
-    the only shuffle in the operator — it moves ~1× corpus bytes, where
-    shuffling the level-1 n-gram counts (the earlier ``split``/``fused``
-    shapes) carries every per-doc-distinct bigram+trigram string, ~4-5×
-    corpus. ``HashPartitioning(doc)`` satisfies ClusteredDistribution
-    for every downstream ``groupBy`` keyed on doc, so tokenization, the
-    level-1 count aggregate, and the fused level-2 aggregate all run
-    partition-local with zero further exchanges and no join. Measured
-    (local[32], interleaved A/B): sf1 docpart 1.50 s vs split 5.25 s vs
-    fused 6.9 s; sf10 6.0 s vs 18.1 s vs 32.3 s.
+    the only shuffle in the operator. ``HashPartitioning(doc)`` satisfies
+    ClusteredDistribution for every downstream ``groupBy`` keyed on doc,
+    so tokenization, the level-1 count aggregate, and the level-2
+    aggregate all run partition-local with zero further exchanges and no
+    join. docpart won because it shuffles ~1× corpus bytes where
+    exchanging the level-1 n-gram counts carries every per-doc-distinct
+    bigram+trigram string, ~4-5× corpus (sf10, local[32]: 6.0 s vs 18.1
+    s). ``plan="nopart"`` is the same plan without the repartition, for
+    inputs already bucketed on ``id_col``.
 
     Tokenization detail: the token array is sliced into 3 shifted views
     and exploded once per position (``explode_outer`` keeps empty docs
@@ -216,19 +214,18 @@ def repetition_signals(df: DataFrame, text_col: str = "text",
     shape; the token array gets its OWN projection because generators
     get no common-subexpression elimination, so inlining the regex
     would re-run it per slice — measured 14× slower.) The marker row
-    makes short docs survive aggregation. Under docpart the level-2
-    reduction MUST be the fused single aggregate: the join-based split
-    sits directly on the doc-partitioned subtree with no exchange
-    between its branches, and the isnotnull filters pushed into one
-    branch break AQE canonical matching — the corpus would be scanned
-    and tokenized twice, with the doc-level tri frame broadcast (not
-    scale-safe). No Python anywhere in the row path.
+    makes short docs survive aggregation. The level-2 reduction is one
+    fused aggregate: a join-based split would sit directly on the
+    doc-partitioned subtree with no exchange between its branches, and
+    the isnotnull filters pushed into one branch break AQE canonical
+    matching — the corpus would be scanned and tokenized twice, with the
+    doc-level tri frame broadcast (not scale-safe). No Python anywhere in
+    the row path.
     """
-    plan = plan or os.environ.get("SPARK_GRAFT_REPETITION_PLAN", "docpart")
-    if plan not in ("docpart", "nopart", "split", "fused"):
+    if plan not in ("docpart", "nopart"):
         raise ValueError(
-            f"SPARK_GRAFT_REPETITION_PLAN must be docpart|nopart|split|"
-            f"fused, got {plan!r}")
+            f"repetition_signals plan must be 'docpart' or 'nopart', "
+            f"got plan={plan!r}")
     t = normalized_text(F.col(text_col))
     toks = F.split(t, " ")
 
@@ -236,12 +233,12 @@ def repetition_signals(df: DataFrame, text_col: str = "text",
         # ONE exchange, of the RAW corpus: each source row is a whole
         # document, so hash-partitioning by doc_id BEFORE tokenization
         # shuffles ~1× corpus bytes, while exchanging the level-1 n-gram
-        # counts (the split/fused shapes) carries ~4-5× corpus (every
-        # per-doc-distinct bigram+trigram string). HashPartitioning(doc)
-        # satisfies ClusteredDistribution for every downstream groupBy
-        # whose keys include doc_id, so the level-1 agg, both level-2
-        # aggs, and the recombining join all plan WITHOUT further
-        # exchanges — the whole operator is one corpus-sized shuffle.
+        # counts would carry ~4-5× corpus (every per-doc-distinct
+        # bigram+trigram string). HashPartitioning(doc) satisfies
+        # ClusteredDistribution for every downstream groupBy whose keys
+        # include doc_id, so the level-1 and level-2 aggs plan WITHOUT
+        # further exchanges — the whole operator is one corpus-sized
+        # shuffle.
         df = df.repartition(F.col(id_col))
     # plan == "nopart" (r13): identical to docpart but WITHOUT the
     # explicit repartition — for inputs whose SCAN already reports
@@ -287,106 +284,21 @@ def repetition_signals(df: DataFrame, text_col: str = "text",
                        F.col("__g.g").alias("ngram"))
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    # Final per-doc reduction, split by family over the SAME level-1
-    # aggregate (the filters sit above a canonically identical subtree,
-    # so the exchange is planned once and reused): the bigram argmax
-    # needs max(struct(cnt, ngram)) — a sort-based aggregate, since
-    # neither struct nor string max fits HashAggregate's fixed-width
-    # buffers — and fusing the trigram sums into that aggregate dragged
-    # previously hash-aggregated work into the sort (measured +68% at
-    # sf1). Split, the sort covers only bigram rows, the trigram
-    # sums stay a HashAggregate, and both branch outputs are hash-
-    # partitioned on the same (doc, nchars) keys so the recombining
-    # left join needs no further exchange. Tie-break matches the
+    # Final per-doc reduction: one aggregate, no join. max(struct(cnt,
+    # ngram)) is not hash-aggregable (struct/string buffers don't fit
+    # HashAggregate's fixed-width slots), so this is a SortAggregate over
+    # all level-1 rows; a pinned fixed-width argmax re-probed by join
+    # measured slower (sf10 15.6 s vs 7.1 s). Tie-break matches the
     # oracle's ORDER BY cnt DESC, ngram DESC.
-    argmax = os.environ.get("SPARK_GRAFT_REPETITION_ARGMAX", "sort")
-    if plan in ("fused", "docpart", "nopart") and argmax == "joinback":
-        # r14 joinback argmax: the fused level-2's max(struct(cnt,
-        # ngram)) is NOT hash-aggregable (struct/string buffers don't
-        # fit HashAggregate's fixed-width slots) → SortAggregate, whose
-        # sort buffers EVERY level-1 n-gram string — the one remaining
-        # sf100 spill (167 GB memory / 25 GB disk, BASELINE.md §r13).
-        # Joinback replaces the sort with fixed-width work: PIN the
-        # level-1 counts (localCheckpoint — sequential write, no sort;
-        # partitioning survives, so docpart/nopart stay exchange-free
-        # downstream), take max(cnt)/tri-sums per doc in a pure
-        # fixed-width HashAggregate over a string-free projection,
-        # re-probe the pinned counts for the max-count rows with a
-        # shuffle_hash join (per-partition build of the doc→maxcnt map,
-        # no sort on the streamed side), and tie-break max(ngram) over
-        # just those rows (~1 row/doc — the only string aggregate
-        # left). The pin is what makes the two consumers of counts read
-        # ONE materialization (AQE canonical-stage matching does not
-        # unify them on this Spark version — same finding as the
-        # total-over-groups pin).
-        # DISK_ONLY: the pinned level-1 frame is ~4-5x corpus bytes of
-        # n-gram strings — deserialized in-memory blocks OOM a
-        # constrained heap at sf10+, and the whole point here is
-        # replacing the sort SPILL with a sequential spill-by-design
-        from pyspark import StorageLevel
-        pinned = counts.localCheckpoint(eager=False,
-                                        storageLevel=StorageLevel.DISK_ONLY)
-        slim = pinned.select(
-            F.col(id_col), F.col("__nchars"), F.col("__n"), F.col("cnt"),
-            F.col("ngram").isNotNull().alias("__has"))
-        agg1 = slim.groupBy(id_col, "__nchars").agg(
-            F.max(F.when((F.col("__n") == 2) & F.col("__has"),
-                         F.col("cnt"))).alias("__maxcnt"),
-            F.sum(F.when(F.col("__n") == 3, F.col("cnt")))
-            .alias("__tri_total"),
-            F.count(F.when(F.col("__n") == 3, F.lit(1)))
-            .alias("__tri_distinct"),
-        )
-        bi = pinned.filter((F.col("__n") == 2) & F.col("ngram").isNotNull()
-                           ).select(F.col(id_col), F.col("ngram"),
-                                    F.col("cnt"))
-        mx = agg1.select(F.col(id_col).alias("__mid"),
-                         F.col("__maxcnt").alias("__mc"))
-        ties = bi.join(mx.hint("shuffle_hash"),
-                       (bi[id_col] == F.col("__mid"))
-                       & (F.col("cnt") == F.col("__mc")), "inner")
-        top = ties.groupBy(id_col).agg(F.max("ngram").alias("__tng"))
-        joined = (agg1.join(top, [id_col], "left")
-                  .select(F.col(id_col), F.col("__nchars"),
-                          F.when(F.col("__tng").isNotNull(),
-                                 F.struct(F.col("__maxcnt").alias("cnt"),
-                                          F.col("__tng").alias("ngram")))
-                          .alias("__top"),
-                          F.col("__tri_total"), F.col("__tri_distinct")))
-    elif plan in ("fused", "docpart", "nopart"):
-        # single level-2 aggregate: no join; the max(struct) makes it a
-        # SortAggregate over all level-1 rows. Under docpart this is
-        # REQUIRED, not just preferred: the join-based split's two
-        # branches sit directly on the doc-partitioned subtree with no
-        # exchange between them, and the isnotnull filters pushed into
-        # one branch's scan break AQE canonical matching — the corpus
-        # would be scanned + tokenized + exploded TWICE (verified in the
-        # executed plan), and the doc-level tri frame gets broadcast,
-        # which is not scale-safe. Fused keeps exactly one subtree.
-        joined = counts.groupBy(id_col, "__nchars").agg(
-            F.max(F.when((F.col("__n") == 2) & F.col("ngram").isNotNull(),
-                         F.struct(F.col("cnt"), F.col("ngram"))))
-            .alias("__top"),
-            F.sum(F.when(F.col("__n") == 3, F.col("cnt")))
-            .alias("__tri_total"),
-            F.count(F.when(F.col("__n") == 3, F.lit(1)))
-            .alias("__tri_distinct"),
-        )
-    else:
-        bi_top = (
-            counts.filter(F.col("__n") == 2)  # null-ngram marker rows ride
-            .groupBy(id_col, "__nchars")      # along to keep short docs
-            .agg(F.max(F.when(F.col("ngram").isNotNull(),
-                              F.struct(F.col("cnt"), F.col("ngram"))))
-                 .alias("__top"))
-        )
-        tri_stats = (
-            counts.filter(F.col("__n") == 3)
-            .groupBy(id_col, "__nchars")
-            .agg(F.sum("cnt").alias("__tri_total"),
-                 F.count(F.lit(1)).alias("__tri_distinct"))
-        )
-        joined = bi_top.join(tri_stats, [id_col, "__nchars"], "left")
+    joined = counts.groupBy(id_col, "__nchars").agg(
+        F.max(F.when((F.col("__n") == 2) & F.col("ngram").isNotNull(),
+                     F.struct(F.col("cnt"), F.col("ngram"))))
+        .alias("__top"),
+        F.sum(F.when(F.col("__n") == 3, F.col("cnt")))
+        .alias("__tri_total"),
+        F.count(F.when(F.col("__n") == 3, F.lit(1)))
+        .alias("__tri_distinct"),
+    )
     return (
         joined
         .select(

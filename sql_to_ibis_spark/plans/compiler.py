@@ -2570,6 +2570,10 @@ class Compiler:
         conjs[:] = [c for c in conjs if c not in mine]
         return True
 
+    # least fact rows per distinct join key for the LEFT-join fact
+    # pre-aggregation to pay (see _try_left_fact_agg's gate)
+    _LEFT_FACT_AGG_MIN_REDUCTION = 32.0
+
     def _try_left_fact_agg(self, node: ast.SelectNode) -> "ast.SelectNode | None":
         """LEFT-join fact aggregation pushdown (the q13 shape):
 
@@ -2600,8 +2604,8 @@ class Compiler:
         functions, more than one fact-dim equi edge.
 
         Gate: fact footer rows ≥ SPARK_GRAFT_EAGER_AGG_FACT_ROWS_MIN and
-        rows/NDV(key) ≥ SPARK_GRAFT_LEFT_FACT_AGG_MIN_REDUCTION (default
-        32, NDV required). The ratio matters more than it does for inner
+        rows/NDV(key) ≥ _LEFT_FACT_AGG_MIN_REDUCTION (32, NDV
+        required). The ratio matters more than it does for inner
         eager aggregation because the stock LEFT plan's join exchange
         already co-partitions with the downstream per-key aggregate
         (one exchange total), so the rewrite only removes bytes, never a
@@ -2803,9 +2807,7 @@ class Compiler:
                 return None
             ndv = (fact_stats.ndv or {}).get(fact_key_true.lower()) \
                 if getattr(fact_stats, "ndv", None) else None
-            min_red = float(os.environ.get(
-                "SPARK_GRAFT_LEFT_FACT_AGG_MIN_REDUCTION", "32"))
-            if not ndv or rows / ndv < min_red:
+            if not ndv or rows / ndv < self._LEFT_FACT_AGG_MIN_REDUCTION:
                 return None
 
         # ---- build the pre-aggregated fact subquery ----
@@ -2897,6 +2899,10 @@ class Compiler:
                 and isinstance(sub.items[0].expr, ast.ColumnRef)
                 and len(sub.relations) == 1
                 and isinstance(sub.relations[0], ast.TableRef))
+
+    # least footer rows of the retained fact table for the IN-subquery
+    # fold of _try_eager_aggregation (measured gate, see its use)
+    _EAGER_AGG_FOLD_ROWS_MIN = 2_000_000
 
     def _try_eager_aggregation(
         self, node: ast.SelectNode
@@ -3531,11 +3537,9 @@ class Compiler:
                 # than the fold's extra join stages (0.77 vs 0.92 s);
                 # from ~6M fact rows the saved scan dominates (sf1
                 # 1.89→1.67 s, sf10 5.83→5.17 s interleaved medians)
-                fold_min = int(os.environ.get(
-                    "SPARK_GRAFT_EAGER_AGG_FOLD_ROWS_MIN", "2000000"))
                 st_ft = stats[ft]
                 if st_ft is None or not st_ft.rows \
-                        or st_ft.rows < fold_min:
+                        or st_ft.rows < self._EAGER_AGG_FOLD_ROWS_MIN:
                     return None
 
             def eq_closure(seed: "tuple[int, str]") -> "set[tuple[int, str]]":
@@ -3616,7 +3620,7 @@ class Compiler:
         # pin/count job cost MORE than the orders exchange they replace,
         # which AQE overlaps with the aggregate's own stage anyway
         # (sf10 interleaved: certify 8.58 s vs fold-as-is 6.06 s median,
-        # scripts/ab_q18_certify.py). The fold stays join-neutral.
+        # OPTIMIZATION_r16.md). The fold stays join-neutral.
 
         # ---- outer node: join dimensions to the partial, re-aggregate
         out_tree: ast.Relation = ast.SubqueryRef(query=inner, alias=ea_alias)
@@ -4295,15 +4299,15 @@ class Compiler:
         (below that the saved aggregation is smaller than the extra
         broadcast stage's scheduling floor — measured q2: −29 % at sf10,
         −15 % at sf1, +11 % at sf0.1 where the gate now bails).
-        ``SPARK_GRAFT_NO_SINGLE_REL_MAGIC=1`` disables;
-        ``SPARK_GRAFT_SINGLE_REL_MAGIC=1`` forces past the two row-count
-        gates (shape gates still apply) so the forced-gate oracle sweep
-        can exercise the rewrite — uniform row inflation would otherwise
-        CLOSE the dim-side ≤8M gate and leave this path untested."""
-        if node.where is None \
-                or os.environ.get("SPARK_GRAFT_NO_SINGLE_REL_MAGIC"):
+        ``SPARK_GRAFT_SINGLE_REL_MAGIC=0`` disables; ``=1`` forces past
+        the two row-count gates (shape gates still apply) so the
+        forced-gate oracle sweep can exercise the rewrite — uniform row
+        inflation would otherwise CLOSE the dim-side ≤8M gate and leave
+        this path untested."""
+        env = os.environ.get("SPARK_GRAFT_SINGLE_REL_MAGIC")
+        if node.where is None or env == "0":
             return None
-        forced = os.environ.get("SPARK_GRAFT_SINGLE_REL_MAGIC") == "1"
+        forced = env == "1"
         inner_rows = 0.0
         if sub is not None:
             stack: list[ast.Relation] = list(sub.relations)
@@ -6388,70 +6392,60 @@ class Compiler:
             # explosion + broadcast loses to the semi join.
             # explicit broadcast: opting in asserts the (filtered) outer
             # is small; static stats can't see that through the filter
-            # Key-set two-phase: an outer row's verdict depends only
-            # on its correlation-key values, so (1) the DISTINCT outer
-            # key tuples — a subset of the certified-small outer —
-            # broadcast through the huge inner as a map-only inner
-            # join marking the matched key set, then (2) the outer
-            # semi/anti-joins that set null-safely. Both joins
-            # broadcast the small side and the inner never shuffles.
-            # For NOT EXISTS this replaces the r7/r8 ADVICE no-op (a
-            # broadcast hint on the PRESERVED side of a left join,
-            # which Spark ignores) and no row id is computed — nothing
-            # nondeterministic exists to be recomputed. For positive
-            # EXISTS the key set is an opt-in alternative (see the
-            # measured note below); the default stays the row-id
-            # dedup, whose carried width Catalyst prunes.
-            key_cols: list[Column] | None = []
-            seen_keys: set[tuple[int, str]] = set()
-            key_owners: set[int] = set()
-            owner_info: RelationInfo | None = None
-            # positive IN rides the same path: the operand's outer
-            # refs join the key set (the membership conjunct's verdict
-            # depends on them exactly like any correlation key). The
-            # operand compiles against the OUTER scope only, so no
-            # inner-resolve skip applies to its refs.
-            roots: list[tuple[ast.Expr, bool]] = \
-                [(conj, True) for conj in correlated]
-            if operand is not None:
-                roots.append((operand, False))
-            try:
-                for conj, check_inner in roots:
-                    for ref in _walk_all(conj):
-                        if not isinstance(ref, ast.ColumnRef):
-                            continue
-                        if check_inner:
+            if negated:
+                # Key-set two-phase: an outer row's verdict depends only
+                # on its correlation-key values, so (1) the DISTINCT
+                # outer key tuples — a subset of the certified-small
+                # outer — broadcast through the huge inner as a map-only
+                # inner join marking the matched key set, then (2) the
+                # outer anti-joins that set null-safely. Both joins
+                # broadcast the small side and the inner never shuffles.
+                # This replaces the r7/r8 ADVICE no-op (a broadcast hint
+                # on the PRESERVED side of a left join, which Spark
+                # ignores) and no row id is computed — nothing
+                # nondeterministic exists to be recomputed. Positive
+                # EXISTS keeps the row-id dedup (measured note below).
+                key_cols: list[Column] | None = []
+                seen_keys: set[tuple[int, str]] = set()
+                key_owners: set[int] = set()
+                owner_info: RelationInfo | None = None
+                try:
+                    for conj in correlated:
+                        for ref in _walk_all(conj):
+                            if not isinstance(ref, ast.ColumnRef):
+                                continue
                             try:
                                 inner_scope.resolve(ref.name, ref.table)
                                 continue        # inner-side ref
                             except (ColumnNotFoundError,
                                     AmbiguousColumnException):
                                 pass
-                        oinfo, tn = scope.resolve(ref.name, ref.table)
-                        # dedup by resolved identity (qualified and bare
-                        # refs to the same attribute collapse to one key)
-                        ident = (id(oinfo), tn.lower())
-                        if ident in seen_keys:
-                            continue
-                        seen_keys.add(ident)
-                        key_owners.add(id(oinfo))
-                        owner_info = oinfo
-                        key_cols.append(self.compile_expr(ref, scope))
-            except (ColumnNotFoundError, AmbiguousColumnException):
-                key_cols = None
-            if negated:
+                            oinfo, tn = scope.resolve(ref.name, ref.table)
+                            # dedup by resolved identity (qualified and
+                            # bare refs to the same attribute collapse
+                            # to one key)
+                            ident = (id(oinfo), tn.lower())
+                            if ident in seen_keys:
+                                continue
+                            seen_keys.add(ident)
+                            key_owners.add(id(oinfo))
+                            owner_info = oinfo
+                            key_cols.append(self.compile_expr(ref, scope))
+                except (ColumnNotFoundError, AmbiguousColumnException):
+                    key_cols = None
                 if key_cols:
-                    # The matched-key set is sound for any SUPERSET of the
-                    # outer's key values (extra keys can only add matched
-                    # entries no outer row looks up; a NULL key never
-                    # matches the inner condition, so it never enters the
-                    # set regardless). When every correlation key comes
-                    # from ONE catalog-backed relation, derive the keys
-                    # from its RAW base frame: a single-column scan +
-                    # distinct, instead of re-executing the outer's whole
-                    # filtered/joined subtree twice (measured on the q22
-                    # shape: the scalar-avg bind + customer scan ran once
-                    # per consumer — the keys branch and the anti join).
+                    # The matched-key set is sound for any SUPERSET of
+                    # the outer's key values (extra keys can only add
+                    # matched entries no outer row looks up; a NULL key
+                    # never matches the inner condition, so it never
+                    # enters the set regardless). When every correlation
+                    # key comes from ONE catalog-backed relation, derive
+                    # the keys from its RAW base frame: a single-column
+                    # scan + distinct, instead of re-executing the
+                    # outer's whole filtered/joined subtree twice
+                    # (measured on the q22 shape: the scalar-avg bind +
+                    # customer scan ran once per consumer — the keys
+                    # branch and the anti join).
                     if len(key_owners) == 1 and owner_info is not None \
                             and owner_info.base_df is not None:
                         keys = (owner_info.base_df
@@ -6473,32 +6467,6 @@ class Compiler:
                     return df.join(F.broadcast(mt), acond, "left_anti")
                 # defensive fall-back: un-collectable keys → plain anti
                 return df.join(inner_df, cond, "left_anti")
-            if key_cols and os.environ.get(
-                    "SPARK_GRAFT_EXISTS_POSITIVE", "rid") == "keyset":
-                # positive EXISTS/IN key-set semi (opt-in alternative,
-                # measured r13 and NOT adopted): distinct keys from the
-                # FILTERED outer broadcast through the inner, matched
-                # set broadcast back as a left-semi. Same-session A/B
-                # at sf10 (q4): keyset 1.68 s vs rid 1.15 s median, and
-                # even on a SELECT-* wide outer keyset 1.64 vs rid
-                # 1.25 — the extra stages (keys distinct + second outer
-                # scan + matched broadcast) cost more than the rid
-                # dedup, whose carried width Catalyst prunes to the
-                # columns the query actually consumes. Kept behind
-                # SPARK_GRAFT_EXISTS_POSITIVE=keyset for outers whose
-                # re-scan is cheap but whose width defeats pruning.
-                keys = df.select(key_cols).distinct()
-                matched = (F.broadcast(keys)
-                           .join(inner_df, cond, "inner")
-                           .select(keys["*"]).distinct())
-                n_ = next(self._tmp_counter)
-                knames = [f"__ek_{n_}_{i}" for i in range(len(key_cols))]
-                mt = matched.toDF(*knames)
-                scond = None
-                for c, k in zip(key_cols, knames):
-                    e = c.eqNullSafe(mt[k])
-                    scond = e if scond is None else (scond & e)
-                return df.join(F.broadcast(mt), scond, "left_semi")
             # positive EXISTS/IN default: inner join duplicates outer
             # rows per match; a row id (assigned ONCE in this
             # single-execution subtree — the nondeterministic id must

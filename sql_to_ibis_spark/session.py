@@ -51,10 +51,9 @@ def get_spark(app_name: str = "sql_to_ibis_spark",
         # shuffled side. Interleaved A/B at sf10 (scripts/ab_shj.py): q13
         # −27%, q5 −21%, dedup_exact −15%, q7 −13%, q21 −12%, q18/q3/
         # multiway within noise — no regressions across two sweeps.
-        # SPARK_GRAFT_PREFER_SMJ=1 restores the sort-merge preference.
-        .config("spark.sql.join.preferSortMergeJoin",
-                "true" if os.environ.get("SPARK_GRAFT_PREFER_SMJ")
-                else "false")
+        # To restore the sort-merge preference, set this conf on the
+        # session (as scripts/ab_shj.py does).
+        .config("spark.sql.join.preferSortMergeJoin", "false")
         # Arrow for any pandas interchange (UDF paths, toPandas)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # keep timestamps deterministic across engines/oracles

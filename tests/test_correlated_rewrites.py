@@ -186,14 +186,15 @@ class TestMagicSetRestriction:
 class TestRewritePlans:
     """Plan pins: the rewrites must actually change the physical plan."""
 
+    Q17_SELF = (
+        "SELECT sum(l_extendedprice) AS s FROM lineitem l1 "
+        "WHERE l1.l_quantity < (SELECT 0.5 * avg(l2.l_quantity) "
+        "FROM lineitem l2 WHERE l2.l_orderkey = l1.l_orderkey)")
+
     def test_same_table_scalar_plans_window_not_join(self, engine):
         # q17 self-correlation: the plan must contain a Window and NO join
         # of any kind — the whole point of the rewrite
-        df = engine.query(
-            "SELECT sum(l_extendedprice) AS s FROM lineitem l1 "
-            "WHERE l1.l_quantity < (SELECT 0.5 * avg(l2.l_quantity) "
-            "FROM lineitem l2 WHERE l2.l_orderkey = l1.l_orderkey)")
-        plan = plan_of(df, "simple")
+        plan = plan_of(engine.query(self.Q17_SELF), "simple")
         assert "Window" in plan
         for join in ("SortMergeJoin", "BroadcastHashJoin",
                      "ShuffledHashJoin", "BroadcastNestedLoopJoin"):
@@ -201,6 +202,22 @@ class TestRewritePlans:
         # exactly one exchange of the table (the window partition), plus
         # the scalar-agg's single-partition exchange at most
         assert plan.count("Exchange hashpartitioning") == 1, plan
+
+    @pytest.mark.parametrize("switch_off", [False, True],
+                             ids=["default", "no_window_decorrelate"])
+    def test_window_decorrelate_switch(self, engine, oracle, monkeypatch,
+                                       switch_off):
+        # SPARK_GRAFT_NO_WINDOW_DECORRELATE=1 turns the window rewrite
+        # off for the q17 self-comparison shape: no Window in the plan,
+        # and both plans give DuckDB's answer
+        if switch_off:
+            monkeypatch.setenv("SPARK_GRAFT_NO_WINDOW_DECORRELATE", "1")
+        else:
+            monkeypatch.delenv("SPARK_GRAFT_NO_WINDOW_DECORRELATE",
+                               raising=False)
+        plan = plan_of(engine.query(self.Q17_SELF), "simple")
+        assert ("Window" in plan) != switch_off, plan
+        oracle(self.Q17_SELF)
 
     def test_magic_set_plans_semi_join(self, engine):
         # different-table scalar with a selective outer filter: the inner
@@ -354,10 +371,10 @@ class TestSingleRelationMagicSet:
         # rewrite is off — pin it behind that switch
         monkeypatch.setenv("SPARK_GRAFT_NO_SHARED_WINDOW_DECORRELATE", "1")
         on = self._semi_count(big_engine, self.Q2ISH)
-        monkeypatch.setenv("SPARK_GRAFT_NO_SINGLE_REL_MAGIC", "1")
+        monkeypatch.setenv("SPARK_GRAFT_SINGLE_REL_MAGIC", "0")
         off = self._semi_count(big_engine, self.Q2ISH)
         assert on == off + 1, (on, off)
-        monkeypatch.delenv("SPARK_GRAFT_NO_SINGLE_REL_MAGIC")
+        monkeypatch.delenv("SPARK_GRAFT_SINGLE_REL_MAGIC")
         compare_frames(big_engine.query(self.Q2ISH).toPandas(),
                        ddb.execute(self.Q2ISH).fetchdf())
 
@@ -365,7 +382,7 @@ class TestSingleRelationMagicSet:
         # session engine keeps the REAL (tiny) footer stats → scale gate
         monkeypatch.setenv("SPARK_GRAFT_NO_SHARED_WINDOW_DECORRELATE", "1")
         on = self._semi_count(engine, self.Q2ISH)
-        monkeypatch.setenv("SPARK_GRAFT_NO_SINGLE_REL_MAGIC", "1")
+        monkeypatch.setenv("SPARK_GRAFT_SINGLE_REL_MAGIC", "0")
         off = self._semi_count(engine, self.Q2ISH)
         assert on == off
 
@@ -374,7 +391,7 @@ class TestSingleRelationMagicSet:
         monkeypatch.setenv("SPARK_GRAFT_NO_SHARED_WINDOW_DECORRELATE", "1")
         q = self.Q2ISH.replace("p.p_size = 15", "p.p_size <> 15")
         on = self._semi_count(big_engine, q)
-        monkeypatch.setenv("SPARK_GRAFT_NO_SINGLE_REL_MAGIC", "1")
+        monkeypatch.setenv("SPARK_GRAFT_SINGLE_REL_MAGIC", "0")
         off = self._semi_count(big_engine, q)
         assert on == off
 
@@ -390,7 +407,7 @@ class TestSingleRelationMagicSet:
             "  AND l2.l_suppkey = s.s_suppkey)"
         )
         on = self._semi_count(big_engine, q)
-        monkeypatch.setenv("SPARK_GRAFT_NO_SINGLE_REL_MAGIC", "1")
+        monkeypatch.setenv("SPARK_GRAFT_SINGLE_REL_MAGIC", "0")
         off = self._semi_count(big_engine, q)
         assert on == off
 
@@ -426,7 +443,7 @@ class TestSingleRelationMagicSet:
             "WHERE d.dsize = 15 AND f.fv = ("
             "  SELECT min(f2.fv) FROM fact f2 WHERE f2.fk = d.dk)")
         got_on = eng.query(sql).collect()
-        monkeypatch.setenv("SPARK_GRAFT_NO_SINGLE_REL_MAGIC", "1")
+        monkeypatch.setenv("SPARK_GRAFT_SINGLE_REL_MAGIC", "0")
         got_off = eng.query(sql).collect()
         assert got_on == got_off
         for t in ("dim", "fact", "oth"):

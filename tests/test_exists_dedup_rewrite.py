@@ -136,24 +136,6 @@ def test_auto_gate_requires_small_certified_outer(engine, monkeypatch):
     assert "LeftSemi" in hplan and "__exists_rid" not in hplan, hplan
 
 
-def test_positive_exists_keyset_opt_in(engine, monkeypatch):
-    # the key-set semi alternative (SPARK_GRAFT_EXISTS_POSITIVE=keyset,
-    # measured slower than rid at sf10 but kept for width-defeats-
-    # pruning outers): matched-set broadcast semi, zero rid machinery
-    monkeypatch.setenv("SPARK_GRAFT_EXISTS_DEDUP_REWRITE", "1")
-    monkeypatch.setenv("SPARK_GRAFT_EXISTS_POSITIVE", "keyset")
-    plan = engine.explain(Q4_STYLE)
-    assert "monotonically_increasing_id" not in plan, plan
-    assert "__exists_rid" not in plan, plan
-    assert "__ek_" in plan, plan
-    assert "SortMergeJoin" not in plan, plan
-    # and it must agree with the rid default on values
-    keyset = engine.query(Q4_STYLE).toPandas()
-    monkeypatch.delenv("SPARK_GRAFT_EXISTS_POSITIVE", raising=False)
-    rid = engine.query(Q4_STYLE).toPandas()
-    compare_frames(rid, keyset, ordered=True)
-
-
 def test_force_off_keeps_semi_join(engine, monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_EXISTS_DEDUP_REWRITE", "0")
     engine.analyze()

@@ -708,16 +708,21 @@ def test_repetition_signals_planted(spark):
         # exact trigram repetition: "a b c a b c" has 4 trigrams, 3 distinct
         (3, "a b c a b c"),
         (4, "one"),          # too short for any bigram/trigram
+        (5, ""),             # empty doc still gets a row
+        (6, "x y x y p q p q"),  # tie: 'x y' and 'p q' both 2×
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     got = {r["doc_id"]: r for r in
            text.repetition_signals(df).collect()}
+    assert set(got) == {1, 2, 3, 4, 5, 6}
     assert got[1]["top_bigram"] == "buy now"
     assert got[1]["top_bigram_char_frac"] > 0.8
     assert got[2]["dup_trigram_frac"] == 0.0
     assert got[3]["dup_trigram_frac"] == pytest.approx(0.25, abs=1e-6)
     assert got[4]["top_bigram"] is None
     assert got[4]["top_bigram_char_frac"] == 0.0
+    assert got[5]["top_bigram"] is None
+    assert got[6]["top_bigram"] == "x y"     # ties break by ngram DESC
 
 
 def test_duplicate_line_stats_planted(spark):
@@ -733,6 +738,13 @@ def test_duplicate_line_stats_planted(spark):
     assert got[2]["dup_line_frac"] == 0.0
     assert got[3]["dup_line_frac"] == 0.75
     assert got[3]["dup_line_char_frac"] == 0.75
+
+
+def test_repetition_signals_rejects_unknown_plan(docs):
+    # only docpart and nopart exist; the error names the argument
+    with pytest.raises(ValueError, match=r"plan='split'") as exc:
+        text.repetition_signals(docs, plan="split")
+    assert "SPARK_GRAFT" not in str(exc.value)
 
 
 def test_repetition_signals_no_python_udf(docs):
@@ -1088,36 +1100,3 @@ def test_jpeg_decode_distributed(spark, docs):
         assert r["height"] == 8 * (1 + (i // 4) % 4)
         assert r["channels"] == 1
         assert r["mean_pixel"] == float(2 * (i % 64) + 128)
-
-
-def test_repetition_signals_joinback_matches_sort(spark, docs, monkeypatch):
-    # r14 joinback argmax (SPARK_GRAFT_REPETITION_ARGMAX=joinback):
-    # level-1 counts pinned, max-count via fixed-width HashAggregate,
-    # tie rows re-probed with a shuffle_hash join, max(ngram) over ties
-    # only — must be value-identical to the fused sort aggregate,
-    # including the DESC tie-break and short-doc markers
-    rows = [
-        (1, "buy now buy now buy now buy now buy now"),
-        (2, "alpha beta gamma delta epsilon zeta"),
-        (3, "a b c a b c"),
-        (4, "one"),
-        (5, ""),                       # empty doc
-        (6, "x y x y p q p q"),        # tie: 'x y' and 'p q' both 2 ×
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    monkeypatch.delenv("SPARK_GRAFT_REPETITION_ARGMAX", raising=False)
-    base = {r["doc_id"]: r for r in text.repetition_signals(df).collect()}
-    monkeypatch.setenv("SPARK_GRAFT_REPETITION_ARGMAX", "joinback")
-    jb = {r["doc_id"]: r for r in text.repetition_signals(df).collect()}
-    assert set(base) == set(jb)
-    for k in base:
-        assert tuple(base[k]) == tuple(jb[k]), (k, base[k], jb[k])
-    assert jb[6]["top_bigram"] == "x y"     # DESC tie-break preserved
-
-
-def test_repetition_signals_joinback_on_corpus(docs, monkeypatch):
-    monkeypatch.delenv("SPARK_GRAFT_REPETITION_ARGMAX", raising=False)
-    base = sorted(tuple(r) for r in text.repetition_signals(docs).collect())
-    monkeypatch.setenv("SPARK_GRAFT_REPETITION_ARGMAX", "joinback")
-    jb = sorted(tuple(r) for r in text.repetition_signals(docs).collect())
-    assert base == jb
