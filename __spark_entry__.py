@@ -17,6 +17,80 @@ from pyspark.sql import DataFrame, SparkSession
 
 _ENGINES: dict = {}
 
+# The TPC-H-ish testdata's real key structure, declared RELY-style as a
+# warehouse deployment would (verified once by
+# engine.validate_constraints at sf0.01 — zero violations).
+PRIMARY_KEYS = (("part", "p_partkey"), ("supplier", "s_suppkey"),
+                ("nation", "n_nationkey"), ("region", "r_regionkey"),
+                ("customer", "c_custkey"), ("orders", "o_orderkey"))
+FOREIGN_KEYS = (("lineitem", "l_partkey", "part"),
+                ("lineitem", "l_suppkey", "supplier"),
+                ("lineitem", "l_orderkey", "orders"),
+                ("supplier", "s_nationkey", "nation"),
+                ("customer", "c_nationkey", "nation"),
+                ("nation", "n_regionkey", "region"),
+                ("orders", "o_custkey", "customer"))
+
+# Forced-gates mode (scripts/check_oracle.py --force-gates and
+# tests/test_forced_gate_oracle.py): every stats-gated rewrite opens, so
+# the oracle differential checks each rewrite's plan at test scale —
+# stats may only ever pick the plan, never the answer. forced_gate_engine
+# inflates the stats, which opens the row-count gates; these switches
+# open the gates that inflation cannot open or closes.
+FORCED_GATE_ENV = {
+    "SPARK_GRAFT_EXISTS_DEDUP_REWRITE": "1",
+    # inflation CLOSES the single-rel magic dim gate (<= 8M rows)
+    "SPARK_GRAFT_SINGLE_REL_MAGIC": "1",
+    # eager aggregation's NDV-product profitability gate
+    "SPARK_GRAFT_EAGER_AGG": "1",
+    # LEFT-join fact aggregation's reduction-ratio gate
+    "SPARK_GRAFT_LEFT_FACT_AGG": "1",
+    # NDV clamping CLOSES the near-unique-key prepartition gate
+    "SPARK_GRAFT_PREPART_AGG": "1",
+    # build-side keyset reduction's multiplicity gate
+    "SPARK_GRAFT_SEMI_BUILD_KEYSET": "1",
+    # both size gates of the constraint flag-join rewrite
+    "SPARK_GRAFT_CONSTRAINT_FLAG_MIN_ROWS": "0",
+    "SPARK_GRAFT_CONSTRAINT_FLAG_MAX_KEYS": "1e18",
+    "SPARK_GRAFT_TOTAL_PIN": "1",
+    # star semi reduction gates on Catalyst's file-size estimate, which
+    # inflated stats cannot move
+    "SPARK_GRAFT_SEMIJOIN_FACT_MIN": "0",
+}
+
+
+def declare_constraints(eng) -> None:
+    for t, c in PRIMARY_KEYS:
+        eng.add_primary_key(t, c)
+    for t, c, r in FOREIGN_KEYS:
+        eng.add_foreign_key(t, c, r)
+
+
+def inflate_stats(eng, rows: int = 10_000_000, ndv: float = 100.0) -> None:
+    """Make every table's stats claim at least ``rows`` rows and at most
+    ``ndv`` distinct values per column: opens every row-count gate."""
+    for name in eng.catalog.names():
+        st = eng.catalog.get(name).stats
+        if st is None:
+            continue
+        st.rows = max(st.rows, rows)
+        st.ndv = {c: min(v, ndv) for c, v in st.ndv.items()}
+
+
+def forced_gate_engine(spark: SparkSession, sf_dir: str):
+    """A fresh engine over ``sf_dir`` for forced-gates mode: analyzed,
+    keys declared, stats inflated. Its plans are forced only while
+    FORCED_GATE_ENV is in ``os.environ``; register it under
+    ``_engine_key(spark, sf_dir)`` so ``queries()`` entries run on it."""
+    from sql_to_ibis_spark import SqlEngine
+
+    eng = SqlEngine(spark)
+    eng.register_dir(sf_dir)
+    eng.analyze()
+    declare_constraints(eng)
+    inflate_stats(eng)
+    return eng
+
 
 def _engine_key(spark: SparkSession, sf_dir: str) -> tuple:
     # the layout flag is part of the cache key so one session can hold
@@ -64,32 +138,15 @@ def _engine_for(spark: SparkSession, sf_dir: str):
             eng.analyze()
         except Exception:
             pass
-        # Informational constraints (r14): the TPC-H-ish testdata's real
-        # key structure, declared RELY-style exactly as a warehouse
-        # deployment would (verified once by engine.validate_constraints
-        # at sf0.01 — zero violations). The planner uses them for
-        # constraint join rewrites: dropping row-preserving dim joins
-        # and shrinking dim-predicate builds to filtered keysets (q14 at
-        # sf10: 1.28 -> 0.46 s). SPARK_GRAFT_NO_CONSTRAINT_REWRITE=1
-        # disables the rewrite; SPARK_GRAFT_NO_CONSTRAINTS=1 skips the
-        # declarations entirely.
+        # Informational constraints (r14, PRIMARY_KEYS/FOREIGN_KEYS).
+        # The planner uses them for constraint join rewrites: dropping
+        # row-preserving dim joins and shrinking dim-predicate builds to
+        # filtered keysets (q14 at sf10: 1.28 -> 0.46 s).
+        # SPARK_GRAFT_NO_CONSTRAINT_REWRITE=1 disables the rewrite;
+        # SPARK_GRAFT_NO_CONSTRAINTS=1 skips the declarations entirely.
         if os.environ.get("SPARK_GRAFT_NO_CONSTRAINTS") != "1":
             try:
-                for t, c in (("part", "p_partkey"),
-                             ("supplier", "s_suppkey"),
-                             ("nation", "n_nationkey"),
-                             ("region", "r_regionkey"),
-                             ("customer", "c_custkey"),
-                             ("orders", "o_orderkey")):
-                    eng.add_primary_key(t, c)
-                for t, c, r in (("lineitem", "l_partkey", "part"),
-                                ("lineitem", "l_suppkey", "supplier"),
-                                ("lineitem", "l_orderkey", "orders"),
-                                ("supplier", "s_nationkey", "nation"),
-                                ("customer", "c_nationkey", "nation"),
-                                ("nation", "n_regionkey", "region"),
-                                ("orders", "o_custkey", "customer")):
-                    eng.add_foreign_key(t, c, r)
+                declare_constraints(eng)
             except Exception:
                 pass
         # Opt-in bucketed fact layout (SPARK_GRAFT_BUCKETED_FACTS=1):

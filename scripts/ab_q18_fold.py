@@ -1,4 +1,4 @@
-"""q18 IN-keyset fold A/B: stock keyset-reduction plan (two fact scans)
+"""q18 IN-keyset fold A/B: the stock semi join plan (two fact scans)
 vs the eager-aggregation fold (one fact scan, HAVING on the partial).
 
     python scripts/ab_q18_fold.py <sf_dir> [trials]

@@ -45,52 +45,13 @@ def main() -> int:
     spark = get_spark(app_name="oracle_check")
     if force_gates:
         # run the ENTIRE suite with every stats-dependent rewrite gate
-        # forced open (synthetic rows=10M, NDV clamped to 100, EXISTS
-        # rewrite env-forced): stats must only ever pick the plan, so
+        # forced open (entrymod.FORCED_GATE_ENV plus stats inflated to
+        # 10M rows / NDV 100): stats must only ever pick the plan, so
         # every entry must still match the oracle. This is the sweep
         # that would have caught the r7 gate-open-only defects.
-        os.environ["SPARK_GRAFT_EXISTS_DEDUP_REWRITE"] = "1"
-        # row-count-gated r9 rewrites: uniform inflation CLOSES the
-        # single-rel magic dim gate (<= 8M), so env-force it and the
-        # eager-agg profitability gate too
-        os.environ["SPARK_GRAFT_SINGLE_REL_MAGIC"] = "1"
-        os.environ["SPARK_GRAFT_EAGER_AGG"] = "1"
-        os.environ["SPARK_GRAFT_IN_KEYSET_REDUCTION"] = "1"
-        # r11: NDV clamping CLOSES the near-unique-key prepart gate
-        # (prod ndv 100 << rows/8) — env-force it open instead
-        os.environ["SPARK_GRAFT_PREPART_AGG"] = "1"
-        # r13: build-side keyset reduction for correlated semi/anti
-        os.environ["SPARK_GRAFT_SEMI_BUILD_KEYSET"] = "1"
-        # r14: constraint flag rewrites (open both size gates) and the
-        # total-over-groups pin
-        os.environ["SPARK_GRAFT_CONSTRAINT_FLAG_MIN_ROWS"] = "0"
-        os.environ["SPARK_GRAFT_CONSTRAINT_FLAG_MAX_KEYS"] = "1e18"
-        os.environ["SPARK_GRAFT_TOTAL_PIN"] = "1"
-        from sql_to_ibis_spark import SqlEngine
-        eng = SqlEngine(spark)
-        eng.register_dir(sf_dir)
-        eng.analyze()
-        # r14: declare the testdata's real keys so the constraint join
-        # rewrites participate in the forced differential
-        for t, c in (("part", "p_partkey"), ("supplier", "s_suppkey"),
-                     ("nation", "n_nationkey"), ("region", "r_regionkey"),
-                     ("customer", "c_custkey"), ("orders", "o_orderkey")):
-            eng.add_primary_key(t, c)
-        for t, c, r in (("lineitem", "l_partkey", "part"),
-                        ("lineitem", "l_suppkey", "supplier"),
-                        ("lineitem", "l_orderkey", "orders"),
-                        ("supplier", "s_nationkey", "nation"),
-                        ("customer", "c_nationkey", "nation"),
-                        ("nation", "n_regionkey", "region"),
-                        ("orders", "o_custkey", "customer")):
-            eng.add_foreign_key(t, c, r)
-        for name in eng.catalog.names():
-            st = eng.catalog.get(name).stats
-            if st is None:
-                continue
-            st.rows = max(st.rows, 10_000_000)
-            st.ndv = {c: min(v, 100.0) for c, v in st.ndv.items()}
-        entrymod._ENGINES[entrymod._engine_key(spark, sf_dir)] = eng
+        os.environ.update(entrymod.FORCED_GATE_ENV)
+        entrymod._ENGINES[entrymod._engine_key(spark, sf_dir)] = \
+            entrymod.forced_gate_engine(spark, sf_dir)
     con = duckdb.connect()
     for path in sorted(glob.glob(os.path.join(sf_dir, "*.parquet"))):
         name = os.path.splitext(os.path.basename(path))[0]

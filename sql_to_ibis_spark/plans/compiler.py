@@ -202,7 +202,7 @@ class Compiler:
         self.spark = spark
         # engine-owned list collecting frames persisted by _pin (persist
         # mode only) so the engine can unpersist them between queries —
-        # without it a long-lived session accumulates cached keyset/CTE
+        # without it a long-lived session accumulates cached grouped/CTE
         # frames until the ContextCleaner happens to reclaim them
         self._pin_registry = pin_registry
         self.user_functions = user_functions or {}
@@ -228,31 +228,36 @@ class Compiler:
         # set (scoped) by _compile_aggregation while compiling aggregate
         # items; gates the decimal-sum limb fast path
         self._agg_low_card_groups = False
+        # per-select-body plans, keyed by id() of the body's AST relations:
+        # broadcast semi reducers (_plan_semi_reduction) and static
+        # broadcast sides (_plan_stats_broadcasts); saved and restored
+        # around every nested body
+        self._semi_plan: dict[
+            int, list[tuple[list[tuple[str, str]], DataFrame]]] = {}
+        self._bcast_hints: dict[int, str] = {}
+        # nesting depth of compile(); the top-level call's exit drops the
+        # synthetic collapsed-frame CTEs listed in _nxc_frames
+        self._compile_depth = 0
+        self._nxc_frames: list[str] = []
 
     # ------------------------------------------------------------- top level
 
     def compile(
         self, node: ast.SelectNode | ast.SetOpNode | ast.WithNode
     ) -> DataFrame:
-        # _in_keyset_cache entries are keyed by id() of live AST nodes and
-        # normally consumed during _apply_where; scope them to ONE top-level
-        # compile so an aborted compile (exception between planning and
-        # WHERE) cannot leave a stale entry that a later query's recycled
-        # node address would falsely hit (and, with certified=True, silently
-        # skip its IN predicate). Also bounds the checkpoint-block footprint.
-        self._compile_depth = getattr(self, "_compile_depth", 0) + 1
+        self._compile_depth += 1
         try:
             return self._compile_dispatch(node)
         finally:
             self._compile_depth -= 1
             if self._compile_depth == 0:
-                self.__dict__.pop("_in_keyset_cache", None)
                 # synthetic collapsed-frame CTE registrations are scoped
                 # to one top-level compile (names are unique, so this is
                 # a footprint bound, not a correctness need)
-                for nm in self.__dict__.pop("_nxc_frames", []):
+                for nm in self._nxc_frames:
                     self._cte_frames.pop(nm, None)
                     self._cte_reduced.pop(nm, None)
+                self._nxc_frames = []
 
     def _pin(self, df: DataFrame) -> DataFrame:
         """Pin a bounded intermediate frame for reuse across plan branches.
@@ -269,8 +274,9 @@ class Compiler:
           AQE exchange reuse below the persist point (the CTE-attach
           subtree may execute twice).
 
-        Both sites that call this pin group-reduced/keyset frames that are
-        small by construction (bounded by the reducer caps).
+        Every caller pins a group-reduced frame that two plan branches
+        read: the CTE under a CTE-scalar attach, and the grouped frame
+        under a total-over-groups scalar (gated by _total_pin_wanted).
         """
         mode = os.environ.get("SPARK_GRAFT_PIN_MODE", "checkpoint").lower()
         if mode == "persist":
@@ -447,19 +453,13 @@ class Compiler:
         if node.relations:
             df: DataFrame | None = None
             rels: list[RelationInfo] = []
-            saved_semi = getattr(self, "_semi_plan", {})
+            saved_semi = self._semi_plan
             saved_attach = self._cte_attach
             # runs BEFORE semi-reduction planning: the rewritten conjunct
             # carries a ScalarRef, which the reducer already excludes
             self._cte_attach = self._plan_cte_scalar_attach(node)
             self._semi_plan = self._plan_semi_reduction(node)
-            ks_extra, ks_cache = self._plan_in_keyset_reduction(node)
-            for k in ks_extra:
-                self._semi_plan.setdefault(k, []).extend(ks_extra[k])
-            if not hasattr(self, "_in_keyset_cache"):
-                self._in_keyset_cache: dict[int, tuple[DataFrame, bool]] = {}
-            self._in_keyset_cache.update(ks_cache)
-            saved_bcast = getattr(self, "_bcast_hints", {})
+            saved_bcast = self._bcast_hints
             self._bcast_hints = self._plan_stats_broadcasts(node)
             try:
                 for rel_ast in node.relations:
@@ -2942,7 +2942,7 @@ class Compiler:
         fact with no inner-side filters, k is exactly the pushdown
         group key, and ``col`` is equi-connected to k — the subquery's
         keyset pass and the outer fact pass collapse into ONE scan +
-        ONE exchange (vs the stock keyset-reduction's two fact scans).
+        ONE exchange (vs the stock semi join plan's two fact scans).
         Sound because the partial groups are computed over exactly the
         subquery's row set, the HAVING filters whole groups (one row
         per key — no multiplicity change), and non-member/NULL operands
@@ -3048,7 +3048,7 @@ class Compiler:
         # extracted structurally here so they don't trip the blanket
         # subquery bail; validity (key match, closure, single unfiltered
         # fact) is checked after the retained core is known, and any
-        # failure aborts the whole rewrite (stock keyset path applies).
+        # failure aborts the whole rewrite (the stock semi join applies).
         all_where = (self._split_conjuncts(node.where)
                      if node.where is not None else [])
         fold_cands: list[ast.InSubquery] = []
@@ -3525,18 +3525,19 @@ class Compiler:
         # row per key — no multiplicity change) and unmatched/NULL
         # operands vanish through the inner dimension join exactly as IN
         # semantics drop them. Any failed condition aborts the whole
-        # rewrite; the stock keyset-reduction path takes over.
+        # rewrite; the stock semi join takes over.
         inner_having: ast.Expr | None = None
         if fold_cands:
             if len(retained) != 1 or inner_where_list:
                 return None
             ft = next(iter(retained))
             if not forced:
-                # measured gate: at the sf0.1 stage floor the stock
-                # keyset-reduction's broadcast second pass is cheaper
-                # than the fold's extra join stages (0.77 vs 0.92 s);
-                # from ~6M fact rows the saved scan dominates (sf1
-                # 1.89→1.67 s, sf10 5.83→5.17 s interleaved medians)
+                # measured gate (r12, against the since-deleted key-set
+                # reduction): at the sf0.1 stage floor a broadcast second
+                # pass is cheaper than the fold's extra join stages
+                # (0.77 vs 0.92 s); from ~6M fact rows the saved scan
+                # dominates (sf1 1.89→1.67 s, sf10 5.83→5.17 s
+                # interleaved medians)
                 st_ft = stats[ft]
                 if st_ft is None or not st_ft.rows \
                         or st_ft.rows < self._EAGER_AGG_FOLD_ROWS_MIN:
@@ -4997,214 +4998,13 @@ class Compiler:
 
     def _apply_semi_reduction(self, rel: ast.Relation,
                               df: DataFrame) -> DataFrame:
-        for pairs, red in getattr(self, "_semi_plan", {}).get(id(rel), []):
+        for pairs, red in self._semi_plan.get(id(rel), []):
             cond: Column | None = None
             for fc, dc in pairs:
                 piece = df[fc] == red[dc]
                 cond = piece if cond is None else (cond & piece)
             df = df.join(F.broadcast(red), cond, "left_semi")
         return df
-
-    # runtime-certified key-set cap for the aggregated-IN reduction: the
-    # surviving keys are collected for an explicit broadcast, so the
-    # estimate must sit comfortably under the session broadcast ceiling
-    _IN_KEYSET_CAP = 32 << 20
-
-    def _plan_in_keyset_reduction(
-        self, node: ast.SelectNode
-    ) -> tuple[dict[int, list[tuple[list[tuple[str, str]], DataFrame]]],
-               dict[int, tuple[DataFrame, bool]]]:
-        """TPC-H q18-shape reduction: ``WHERE col IN (SELECT k FROM big
-        GROUP BY k HAVING agg ...)`` over an inner-join tree that scans
-        another copy of the big table.
-
-        The stock plan sends the fact through TWO exchanges — once for
-        the subquery's own groupBy and once for the outer join — because
-        the HAVING-surviving key count is unknown until the first pass
-        finishes, so neither static planning nor AQE (the join sits in
-        the same stage graph as the agg) can shrink the second pass. At
-        sf10 only ~918k of 15M orderkeys survive q18's HAVING (~7 MB of
-        longs): exactly a broadcast-sized reducer that static stats can
-        never certify.
-
-        This pass closes that gap with RUNTIME certification: the key
-        set is computed once (it is needed for the semi join regardless),
-        pinned via lazy localCheckpoint, and counted — one cheap action
-        over the already-required aggregate. When rows × estimated key
-        width ≤ SPARK_GRAFT_IN_KEYSET_CAP (default 32 MB), every base
-        relation of the join tree whose column is transitively
-        equi-connected to the IN operand — including the operand's own
-        table — is broadcast-semi-reduced AT THE SCAN, before any
-        exchange, through the existing _semi_plan mechanism. The WHERE-
-        level semi join is then skipped (the operand-table scan reduction
-        IS the IN predicate; σ on one side commutes through the inner
-        equi-join). Over the cap, the checkpointed frame still feeds the
-        stock shuffle semi join, so the extra count is the only cost.
-
-        Soundness mirrors _plan_semi_reduction: reducing a base relation
-        by a superset-implied key filter only removes rows that could
-        never survive the full conjunct set, which is still applied
-        downstream unchanged. Only positive (non-negated), uncorrelated,
-        single-column IN conjuncts in top-level WHERE position qualify;
-        the subquery must be group-reduced with a HAVING (the unknown-
-        selectivity signature — without HAVING the key set is the full
-        group-key NDV, which footer stats already size).
-
-        Gate: some OTHER connected base relation must be plan-estimated
-        ≥ SPARK_GRAFT_SEMIJOIN_FACT_MIN (there must be a second big pass
-        to reduce — the certification count is not free at tiny scale).
-        SPARK_GRAFT_IN_KEYSET_REDUCTION=0 disables, =1 forces (static
-        gates skipped; the runtime cap still decides).
-        """
-        env = os.environ.get("SPARK_GRAFT_IN_KEYSET_REDUCTION")
-        if env == "0" or node.where is None or not node.relations:
-            return {}, {}
-        forced = env == "1"
-        fact_min = int(os.environ.get(
-            "SPARK_GRAFT_SEMIJOIN_FACT_MIN", str(64 << 20)))
-        cap = int(os.environ.get(
-            "SPARK_GRAFT_IN_KEYSET_CAP", str(self._IN_KEYSET_CAP)))
-
-        # candidate conjuncts: positive IN over a grouped-HAVING subquery
-        cands: list[ast.InSubquery] = []
-        for conjunct in self._split_conjuncts(node.where):
-            n, neg = conjunct, False
-            while isinstance(n, ast.UnaryOp) and n.op == "not" \
-                    and isinstance(n.operand,
-                                   (ast.InSubquery, ast.ExistsSubquery)):
-                neg = not neg
-                n = n.operand
-            if not isinstance(n, ast.InSubquery) or (n.negated ^ neg):
-                continue
-            sub = n.subquery
-            if not isinstance(sub, ast.SelectNode) or not sub.group_by \
-                    or sub.having is None or sub.limit is not None \
-                    or sub.offset is not None or len(sub.items) != 1 \
-                    or isinstance(sub.items[0].expr, ast.Star):
-                continue
-            if not isinstance(n.operand, ast.ColumnRef):
-                continue
-            cands.append(n)
-        if not cands:
-            return {}, {}
-
-        # flatten the outer inner-join tree of base relations
-        base: list[tuple[ast.Relation, DataFrame]] = []
-        conj_pool: list[ast.Expr] = []
-
-        def flatten(rel: ast.Relation) -> bool:
-            if isinstance(rel, ast.TableRef):
-                df = self._cte_frames.get(rel.name.lower())
-                if df is None:
-                    try:
-                        df = self.catalog.get(rel.name).df
-                    except Exception:
-                        return False
-                base.append((rel, df))
-                return True
-            if isinstance(rel, ast.Join) and rel.kind in ("inner", "cross"):
-                if not (flatten(rel.left) and flatten(rel.right)):
-                    return False
-                if rel.kind == "inner":
-                    conj_pool.extend(self._split_conjuncts(rel.condition))
-                return True
-            return False
-
-        for rel_ast in node.relations:
-            if not flatten(rel_ast):
-                return {}, {}
-        conj_pool.extend(
-            c for c in self._split_conjuncts(node.where)
-            if not self._contains_any_subquery(c)
-            and not self._contains_nondeterministic(c))
-
-        scopes = [Scope([RelationInfo(qualifier="",
-                                      display=(r.alias or r.name
-                                               if isinstance(r, ast.TableRef)
-                                               else ""),
-                                      columns=list(df.columns))])
-                  for r, df in base]
-
-        def owner_of(ref: ast.ColumnRef) -> tuple[int, str] | None:
-            hits = []
-            for i, sc in enumerate(scopes):
-                if self._resolves_in(ref, sc):
-                    hits.append((i, sc.resolve(ref.name, ref.table)[1]))
-            return hits[0] if len(hits) == 1 else None
-
-        # transitive equi-closure over ColumnRef=ColumnRef conjuncts
-        eq_edges: list[tuple[tuple[int, str], tuple[int, str]]] = []
-        for c in conj_pool:
-            if (isinstance(c, ast.BinaryOp) and c.op == "="
-                    and isinstance(c.left, ast.ColumnRef)
-                    and isinstance(c.right, ast.ColumnRef)):
-                a, b = owner_of(c.left), owner_of(c.right)
-                if a and b and a[0] != b[0]:
-                    eq_edges.append((a, b))
-
-        def closure(seed: tuple[int, str]) -> set[tuple[int, str]]:
-            out = {seed}
-            grew = True
-            while grew:
-                grew = False
-                for a, b in eq_edges:
-                    if a in out and b not in out:
-                        out.add(b)
-                        grew = True
-                    elif b in out and a not in out:
-                        out.add(a)
-                        grew = True
-            return out
-
-        def size_of(df: DataFrame) -> int:
-            try:
-                return int(str(df._jdf.queryExecution().optimizedPlan()
-                               .stats().sizeInBytes()))
-            except Exception:
-                return 1 << 62
-
-        extra: dict[int, list[tuple[list[tuple[str, str]], DataFrame]]] = {}
-        cache: dict[int, tuple[DataFrame, bool]] = {}
-        for n in cands:
-            seed = owner_of(n.operand)
-            if seed is None:
-                continue
-            targets = closure(seed)
-            if not forced:
-                if not any(size_of(base[i][1]) >= fact_min
-                           for i, _ in targets if i != seed[0]):
-                    continue
-            try:
-                # a correlated subquery cannot compile standalone — the
-                # outer-scope reference raises, which is exactly the bail
-                sub_df = self.compile(n.subquery)
-            except Exception:
-                continue
-            if len(sub_df.columns) != 1:
-                continue
-            tag = f"__inks_{next(self._tmp_counter)}"
-            # lazy localCheckpoint: the count below materializes it once;
-            # every reducer and (on fallback) the stock semi join reuse
-            # the pinned partitions. Same executor-loss tradeoff as the
-            # CTE scalar attach (documented there).
-            kdf = self._pin(
-                sub_df.select(F.col(_bq(sub_df.columns[0])).alias(tag)))
-            try:
-                rows = kdf.count()
-            except Exception:
-                continue
-            width = 16
-            dt = kdf.schema.fields[0].dataType.simpleString()
-            if dt in ("string", "binary"):
-                width = 48  # conservative: header + bytes for id-ish keys
-            certified = rows * width <= cap
-            cache[id(n)] = (kdf, certified)
-            if not certified:
-                continue
-            for i, colname in targets:
-                extra.setdefault(id(base[i][0]), []).append(
-                    ([(colname, tag)], kdf))
-        return extra, cache
 
     # -------------------------------------------------------------- FROM/join
 
@@ -5327,7 +5127,7 @@ class Compiler:
                     rel, left_df, left_rels, right_df, right_rels)
             scope = Scope(existing + combined)
             cond = self.compile_expr(rel.condition, scope)
-            hint = getattr(self, "_bcast_hints", {}).get(id(rel))
+            hint = self._bcast_hints.get(id(rel))
             if hint == "left":
                 left_df = F.broadcast(left_df)
             elif hint == "right":
@@ -6186,8 +5986,7 @@ class Compiler:
             return None
 
         # ---- build the collapsed frame ----
-        saved_semi = getattr(self, "_semi_plan", {})
-        saved_bcast = getattr(self, "_bcast_hints", {})
+        saved_semi, saved_bcast = self._semi_plan, self._bcast_hints
         self._semi_plan, self._bcast_hints = {}, {}
         try:
             rdf, rinfos = self._compile_relation(target, [])
@@ -6272,7 +6071,7 @@ class Compiler:
         cname = f"__nxc_{n}"
         self._cte_frames[cname] = cdf
         self._cte_reduced[cname] = True
-        self.__dict__.setdefault("_nxc_frames", []).append(cname)
+        self._nxc_frames.append(cname)
 
         new_ref = ast.TableRef(name=cname, alias=t_alias)
 
@@ -6692,6 +6491,13 @@ class Compiler:
         self, df: DataFrame, node: ast.InSubquery, scope: Scope,
         negated: bool, outer_node: "ast.SelectNode | None" = None
     ) -> DataFrame:
+        """Apply one WHERE-conjunct ``x [NOT] IN (subquery)`` to ``df``.
+
+        Correlated subqueries decorrelate to semi/anti joins (NOT IN via
+        the NULL-aware NOT EXISTS form). Uncorrelated IN is a left-semi
+        join against the subquery's one column; NOT IN is an anti join
+        plus a broadcast count row that restores SQL's NULL semantics.
+        The predicate is always applied here, never skipped."""
         if self._is_correlated(node.subquery, scope):
             if negated:
                 # Correlated NOT IN / <>-ALL in WHERE-conjunct position:
@@ -6739,20 +6545,6 @@ class Compiler:
                 outer_node=outer_node)
             if out is not None:
                 return out
-        cached = getattr(self, "_in_keyset_cache", {}).get(id(node))
-        if cached is not None and not negated:
-            self._in_keyset_cache.pop(id(node), None)
-            kdf, certified = cached
-            if certified:
-                # the scan-level broadcast semi reducers planned by
-                # _plan_in_keyset_reduction already enforce membership at
-                # the operand table's scan (and its equi-connected peers)
-                return df
-            # over the cap: stock shuffle semi, reusing the checkpointed
-            # key set so the certification count wasn't a second pass
-            operand = self.compile_expr(node.operand, scope)
-            return df.join(kdf, operand == F.col(kdf.columns[0]),
-                           "left_semi")
         sub = self.compile(node.subquery)
         if len(sub.columns) != 1:
             # parity: reference raises when IN-subquery has >1 column

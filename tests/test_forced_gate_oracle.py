@@ -7,8 +7,9 @@ where real sf0.001 stats happen to open them — the r7/r8 defects
 (NULL-vs-0 count, qualifier crash) were gate-open-only failures that the
 default window could never see. This module re-runs the gate-sensitive
 oracle entries from __spark_entry__ with synthetic stats (rows inflated
-to 10M, every NDV clamped to 100) plus the EXISTS-rewrite env force, and
-requires value equality with DuckDB: stats may only ever pick the PLAN.
+to 10M, every NDV clamped to 100) plus __spark_entry__.FORCED_GATE_ENV,
+and requires value equality with DuckDB: stats may only ever pick the
+PLAN.
 
 scripts/check_oracle.py --force-gates runs the same forcing over the
 FULL entry list at any SF.
@@ -23,7 +24,6 @@ import duckdb
 import pytest
 
 import __spark_entry__ as entrymod
-from sql_to_ibis_spark import SqlEngine
 from tests.conftest import SF_DIR, compare_frames
 
 # SQL-compiled families whose plans move when gates open; pipeline_*
@@ -39,72 +39,21 @@ GATED = sorted(n for n in _qs
                if n.startswith(GATE_PREFIXES) and n in _oracles)
 
 
-def force_gate_stats(eng: SqlEngine) -> None:
-    for name in eng.catalog.names():
-        st = eng.catalog.get(name).stats
-        if st is None:
-            continue
-        st.rows = max(st.rows, 10_000_000)
-        st.ndv = {c: min(v, 100.0) for c, v in st.ndv.items()}
-
-
 @pytest.fixture(scope="module")
 def forced(spark):
-    os.environ["SPARK_GRAFT_EXISTS_DEDUP_REWRITE"] = "1"
-    # r9 rewrites with row-count gates that uniform 10M inflation would
-    # CLOSE (single-rel magic needs the dim side <= 8M) or that carry
-    # their own profitability gate (eager agg NDV product): env-force
-    # both so the differential actually exercises their plans
-    os.environ["SPARK_GRAFT_SINGLE_REL_MAGIC"] = "1"
-    os.environ["SPARK_GRAFT_EAGER_AGG"] = "1"
-    # r10: aggregated-IN key-set reduction (its static fact-size gate
-    # never opens at test scale; the runtime cap still decides)
-    os.environ["SPARK_GRAFT_IN_KEYSET_REDUCTION"] = "1"
-    # r12: LEFT-join fact aggregation pushdown (reduction-ratio gate
-    # never opens at test scale)
-    os.environ["SPARK_GRAFT_LEFT_FACT_AGG"] = "1"
-    # r13: build-side keyset reduction (multiplicity gate never opens at
-    # test scale; forcing proves the rewrite is semantics-free)
-    os.environ["SPARK_GRAFT_SEMI_BUILD_KEYSET"] = "1"
-    # r14: constraint join rewrites — declare the real keys and open the
-    # flag-size gate so every eligible dim gets eliminated/flagged
-    os.environ["SPARK_GRAFT_CONSTRAINT_FLAG_MIN_ROWS"] = "0"
-    eng = SqlEngine(spark)
-    eng.register_dir(SF_DIR)
-    eng.analyze()
-    for t, c in (("part", "p_partkey"), ("supplier", "s_suppkey"),
-                 ("nation", "n_nationkey"), ("region", "r_regionkey"),
-                 ("customer", "c_custkey"), ("orders", "o_orderkey")):
-        eng.add_primary_key(t, c)
-    for t, c, r in (("lineitem", "l_partkey", "part"),
-                    ("lineitem", "l_suppkey", "supplier"),
-                    ("lineitem", "l_orderkey", "orders"),
-                    ("supplier", "s_nationkey", "nation"),
-                    ("customer", "c_nationkey", "nation"),
-                    ("nation", "n_regionkey", "region"),
-                    ("orders", "o_custkey", "customer")):
-        eng.add_foreign_key(t, c, r)
-    force_gate_stats(eng)
-    key = entrymod._engine_key(spark, SF_DIR)
-    old = entrymod._ENGINES.get(key)
-    entrymod._ENGINES[key] = eng
-    con = duckdb.connect()
-    for path in sorted(glob.glob(os.path.join(SF_DIR, "*.parquet"))):
-        name = os.path.splitext(os.path.basename(path))[0]
-        con.execute(f"CREATE VIEW {name} AS SELECT * FROM '{path}'")
-    yield con
-    con.close()
-    if old is None:
-        entrymod._ENGINES.pop(key, None)
-    else:
-        entrymod._ENGINES[key] = old
-    os.environ.pop("SPARK_GRAFT_EXISTS_DEDUP_REWRITE", None)
-    os.environ.pop("SPARK_GRAFT_SINGLE_REL_MAGIC", None)
-    os.environ.pop("SPARK_GRAFT_EAGER_AGG", None)
-    os.environ.pop("SPARK_GRAFT_IN_KEYSET_REDUCTION", None)
-    os.environ.pop("SPARK_GRAFT_LEFT_FACT_AGG", None)
-    os.environ.pop("SPARK_GRAFT_SEMI_BUILD_KEYSET", None)
-    os.environ.pop("SPARK_GRAFT_CONSTRAINT_FLAG_MIN_ROWS", None)
+    # the same forcing as scripts/check_oracle.py --force-gates
+    with pytest.MonkeyPatch.context() as mp:
+        for var, val in entrymod.FORCED_GATE_ENV.items():
+            mp.setenv(var, val)
+        key = entrymod._engine_key(spark, SF_DIR)
+        mp.setitem(entrymod._ENGINES, key,
+                   entrymod.forced_gate_engine(spark, SF_DIR))
+        con = duckdb.connect()
+        for path in sorted(glob.glob(os.path.join(SF_DIR, "*.parquet"))):
+            name = os.path.splitext(os.path.basename(path))[0]
+            con.execute(f"CREATE VIEW {name} AS SELECT * FROM '{path}'")
+        yield con
+        con.close()
 
 
 def test_gate_families_selected():

@@ -1,20 +1,10 @@
-"""Aggregated-IN key-set reduction (TPC-H q18 shape): ``WHERE col IN
-(SELECT k FROM big GROUP BY k HAVING ...)`` materializes the surviving
-key set once (lazy localCheckpoint + count), and — when the runtime
-count certifies it under SPARK_GRAFT_IN_KEYSET_CAP — broadcast-semi-
-reduces every transitively equi-connected base scan, replacing the
-WHERE-level shuffle semi join entirely. Static stats can never size a
-HAVING survivor set; the runtime count can, and it is one cheap action
-over an aggregate the semi join needed anyway.
+"""Aggregated IN (TPC-H q18 shape): ``WHERE col IN (SELECT k FROM big
+GROUP BY k HAVING ...)``.
 
-SPARK_GRAFT_IN_KEYSET_REDUCTION=1 forces (skips the fact-size static
-gate), =0 disables; unset → automatic when another connected base
-relation is plan-estimated ≥ SPARK_GRAFT_SEMIJOIN_FACT_MIN.
-
-Measured (sf10, local[32], interleaved A/B): q18 12.84 → 8.44 s; the
-executed plan loses every SortMergeJoin — lineitem is semi-reduced at
-the scan and AQE broadcast-converts the o⋈l join over the reduced
-orders side.
+At scale the eager-aggregation fold takes q18: the subquery's key pass
+and the outer fact pass become one lineitem scan, with the HAVING on the
+partial aggregate. Every other shape, and q18 below the fold's row gate,
+plans Spark's stock left-semi join against the grouped subquery.
 """
 
 from __future__ import annotations
@@ -22,6 +12,7 @@ from __future__ import annotations
 import pytest
 
 from tests.conftest import compare_frames
+from tests.test_nxc_collapse import _inflated_engine, _opt, _phys
 
 Q18 = """
     SELECT c_name, o.o_orderkey, o_totalprice,
@@ -34,106 +25,75 @@ Q18 = """
     GROUP BY c_name, o.o_orderkey, o_totalprice
     ORDER BY o_totalprice DESC, o.o_orderkey LIMIT 100
 """
+Q18_ORACLE = Q18.replace("o.o_orderkey,", "o.o_orderkey AS o_orderkey,", 1)
 
 
-def _executed(df) -> str:
-    df.collect()
-    return df._jdf.queryExecution().executedPlan().toString()
+@pytest.fixture(scope="module")
+def inflated(spark):
+    return _inflated_engine(spark)
 
 
-def test_q18_forced_matches_stock_and_oracle(engine, ddb, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_IN_KEYSET_REDUCTION", "0")
-    stock = engine.query(Q18).toPandas()
-    monkeypatch.setenv("SPARK_GRAFT_IN_KEYSET_REDUCTION", "1")
-    reduced_df = engine.query(Q18)
-    plan = _executed(reduced_df)
-    # the key-set reducer reaches the scans: LeftSemi probes on __inks_
-    assert "__inks_" in plan
-    compare_frames(reduced_df.toPandas(), stock, ordered=True)
-    oracle = ddb.execute(
-        Q18.replace("o.o_orderkey,", "o.o_orderkey AS o_orderkey,", 1)
-    ).fetchdf()
-    compare_frames(reduced_df.toPandas(), oracle, ordered=True)
-
-
-def test_over_cap_falls_back_to_shuffle_semi(engine, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_IN_KEYSET_REDUCTION", "0")
-    stock = engine.query(Q18).toPandas()
-    monkeypatch.setenv("SPARK_GRAFT_IN_KEYSET_REDUCTION", "1")
-    monkeypatch.setenv("SPARK_GRAFT_IN_KEYSET_CAP", "1")  # nothing fits
-    df = engine.query(Q18)
-    plan = _executed(df)
-    # uncertified: no scan-level reducers, but the checkpointed key set
-    # still feeds the stock semi join — results identical either way
-    assert "LeftSemi" in plan
-    compare_frames(df.toPandas(), stock, ordered=True)
+def test_q18_forced_matches_stock_and_oracle(inflated, ddb, monkeypatch):
+    # ≥ 10M-row stats, default env: the fold reads lineitem once and
+    # leaves no semi join; with eager aggregation off the stock plan
+    # scans lineitem twice through one LeftSemi. Same rows either way.
+    monkeypatch.delenv("SPARK_GRAFT_EAGER_AGG", raising=False)
+    monkeypatch.delenv("SPARK_GRAFT_EAGER_AGG_FOLD_IN", raising=False)
+    folded = inflated.query(Q18)
+    plan = _phys(folded)
+    assert plan.count("lineitem.parquet") == 1, plan
+    assert "LeftSemi" not in plan, plan
+    monkeypatch.setenv("SPARK_GRAFT_EAGER_AGG", "0")
+    stock_df = inflated.query(Q18)
+    plan = _phys(stock_df)
+    assert plan.count("lineitem.parquet") == 2, plan
+    assert plan.count("LeftSemi") == 1, plan
+    got = folded.toPandas()
+    compare_frames(got, stock_df.toPandas(), ordered=True)
+    compare_frames(got, ddb.execute(Q18_ORACLE).fetchdf(), ordered=True)
 
 
 def test_gate_closed_at_test_scale(engine, monkeypatch):
-    # sf0.001 base relations are far below the 64MB fact gate: without
-    # the env force the plan must not carry key-set reducers
-    monkeypatch.delenv("SPARK_GRAFT_IN_KEYSET_REDUCTION", raising=False)
-    plan = engine.query(Q18)._jdf.queryExecution().optimizedPlan().toString()
-    assert "__inks_" not in plan
+    # real sf0.001 stats sit far below the fold's row gate: stock plan
+    monkeypatch.delenv("SPARK_GRAFT_EAGER_AGG", raising=False)
+    assert "LeftSemi" in _opt(engine.query(Q18))
 
 
 @pytest.mark.parametrize("sql", [
-    # NOT IN: three-valued NULL semantics — never reduced
+    # NOT IN: three-valued NULL semantics — an anti join
     """SELECT count(*) AS n FROM orders WHERE o_orderkey NOT IN
        (SELECT l_orderkey FROM lineitem GROUP BY l_orderkey
         HAVING sum(l_quantity) > 200)""",
-    # no HAVING: full-NDV key set, statically sizable — not this pass
+    # no HAVING: nothing for the fold to put on the partial aggregate
     """SELECT count(*) AS n FROM orders WHERE o_orderkey IN
        (SELECT l_orderkey FROM lineitem GROUP BY l_orderkey)""",
 ])
-def test_non_candidates_untouched(engine, monkeypatch, sql):
-    monkeypatch.setenv("SPARK_GRAFT_IN_KEYSET_REDUCTION", "1")
-    df = engine.query(sql)
-    assert "__inks_" not in df._jdf.queryExecution().optimizedPlan().toString()
-    monkeypatch.setenv("SPARK_GRAFT_IN_KEYSET_REDUCTION", "0")
-    stock = engine.query(sql).toPandas()
-    monkeypatch.setenv("SPARK_GRAFT_IN_KEYSET_REDUCTION", "1")
-    compare_frames(df.toPandas(), stock)
+def test_non_candidates_untouched(inflated, ddb, monkeypatch, sql):
+    # every size gate open, still the stock anti/semi join
+    monkeypatch.delenv("SPARK_GRAFT_EAGER_AGG", raising=False)
+    df = inflated.query(sql)
+    assert ("LeftAnti" if "NOT IN" in sql else "LeftSemi") in _opt(df)
+    compare_frames(df.toPandas(), ddb.execute(sql).fetchdf())
 
 
-def test_correlated_grouped_in_raises_unchanged(engine, monkeypatch):
-    # correlated + grouped IN is unsupported either way (decorrelation
-    # bails on aggregated subqueries); the reduction pass must not
-    # change the raised error
+def test_correlated_grouped_in_raises_unchanged(engine):
+    # correlated + grouped IN is unsupported (decorrelation bails on
+    # aggregated subqueries): the outer reference does not resolve
     from sql_to_ibis_spark.errors import ColumnNotFoundError
     sql = """SELECT count(*) AS n FROM orders o WHERE o_orderkey IN
        (SELECT l_orderkey FROM lineitem l WHERE l.l_orderkey = o.o_orderkey
         GROUP BY l_orderkey HAVING sum(l_quantity) > 0)"""
-    for mode in ("0", "1"):
-        monkeypatch.setenv("SPARK_GRAFT_IN_KEYSET_REDUCTION", mode)
-        with pytest.raises(ColumnNotFoundError):
-            engine.query(sql)
+    with pytest.raises(ColumnNotFoundError):
+        engine.query(sql)
 
 
-def _n_keyset_semis(df) -> int:
-    plan = df._jdf.queryExecution().optimizedPlan().toString()
-    return sum(1 for ln in plan.splitlines()
-               if "LeftSemi" in ln and "__inks_" in ln)
-
-
-def test_runtime_cap_decides_reducer_count(engine, monkeypatch):
-    # transitive closure: d.doc_id ~ e.user_id means BOTH scans get a
-    # reducer when certified; under the cap only the single WHERE-level
-    # semi survives (reusing the checkpointed key set)
+def test_in_over_join_with_equated_keys_matches_oracle(inflated, ddb):
+    # d.doc_id ~ e.user_id: the IN operand is equi-connected to a second
+    # table, a shape the fold does not take (no fact aggregate)
     sql = """
         SELECT count(*) AS n FROM documents d
         JOIN events e ON d.doc_id = e.user_id
         WHERE d.doc_id IN (SELECT doc_id FROM documents
           GROUP BY doc_id HAVING count(*) >= 1)
     """
-    monkeypatch.setenv("SPARK_GRAFT_IN_KEYSET_REDUCTION", "0")
-    stock = engine.query(sql).toPandas()
-    monkeypatch.setenv("SPARK_GRAFT_IN_KEYSET_REDUCTION", "1")
-    monkeypatch.setenv("SPARK_GRAFT_IN_KEYSET_CAP", "96")  # ~6 long keys
-    under = engine.query(sql)
-    assert _n_keyset_semis(under) == 1  # fallback shuffle semi only
-    compare_frames(under.toPandas(), stock)
-    monkeypatch.delenv("SPARK_GRAFT_IN_KEYSET_CAP")
-    certified = engine.query(sql)
-    assert _n_keyset_semis(certified) == 2  # both connected scans reduced
-    compare_frames(certified.toPandas(), stock)
+    compare_frames(inflated.query(sql).toPandas(), ddb.execute(sql).fetchdf())

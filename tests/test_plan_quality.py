@@ -301,29 +301,6 @@ def test_repetition_signals_single_corpus_exchange(spark):
     assert plan.count("Scan parquet") == 1, plan
 
 
-def test_q18_keyset_plan_has_no_sort_merge_join(engine, monkeypatch):
-    # r10: with the HAVING-keyset semi-reduction certified, q18's
-    # executed plan loses every SortMergeJoin — lineitem is semi-reduced
-    # at the scan and AQE broadcast-converts the remaining joins over
-    # the reduced orders side (sf10: 12.84 → 8.44 s).
-    monkeypatch.setenv("SPARK_GRAFT_IN_KEYSET_REDUCTION", "1")
-    df = engine.query("""
-        SELECT c_name, o.o_orderkey, o_totalprice,
-          CAST(sum(CAST(l_quantity AS decimal(18,2))) AS double) AS tq
-        FROM customer c
-        JOIN orders o ON c.c_custkey = o.o_custkey
-        JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-        WHERE o.o_orderkey IN (SELECT l_orderkey FROM lineitem
-          GROUP BY l_orderkey HAVING sum(l_quantity) > 200)
-        GROUP BY c_name, o.o_orderkey, o_totalprice
-        ORDER BY o_totalprice DESC, o.o_orderkey LIMIT 100
-    """)
-    df.collect()
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "__inks_" in plan, plan
-    assert "SortMergeJoin" not in plan, plan
-
-
 def test_prepart_agg_gate(engine, monkeypatch):
     # r11: near-unique-key GROUP BY pre-repartition (q18's HAVING
     # aggregate; sf10 end-to-end 5.79 → 4.28 s). Static gate stays

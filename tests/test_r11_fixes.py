@@ -1,11 +1,10 @@
-"""Round-11 hardening: pin-mode durability config, keyset-cache scoping,
+"""Round-11 hardening: pin-mode durability config,
 JPEG bit-reader marker handling, stub fallback honoring, and the
 file_prune_fraction date-probe interval fix."""
 
 from __future__ import annotations
 
 import datetime as _dt
-import os
 
 import pandas as pd
 import pytest
@@ -14,16 +13,13 @@ from sql_to_ibis_spark.operators import multimodal
 from sql_to_ibis_spark.sources import layout
 from tests.conftest import compare_frames
 
-Q18 = """
-    SELECT c_name, o.o_orderkey, o_totalprice,
-      CAST(sum(CAST(l_quantity AS decimal(18,2))) AS double) AS total_qty
-    FROM customer c
-    JOIN orders o ON c.c_custkey = o.o_custkey
-    JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-    WHERE o.o_orderkey IN (SELECT l_orderkey FROM lineitem
-      GROUP BY l_orderkey HAVING sum(l_quantity) > 200)
-    GROUP BY c_name, o.o_orderkey, o_totalprice
-    ORDER BY o_totalprice DESC, o.o_orderkey LIMIT 100
+# the total-over-groups shape (agg_share_of_total): pins its grouped
+# frame when SPARK_GRAFT_TOTAL_PIN=1
+SHARE_OF_TOTAL = """
+    SELECT l_returnflag,
+      round(CAST(sum(l_extendedprice) AS double)
+            / (SELECT sum(l_extendedprice) FROM lineitem), 6) AS revenue_share
+    FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
 """
 
 CTE_ATTACH = """
@@ -43,12 +39,18 @@ CTE_ATTACH = """
 # ------------------------------------------------------------- pin mode
 
 def test_pin_mode_persist_matches_checkpoint(engine, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_IN_KEYSET_REDUCTION", "1")
+    monkeypatch.setenv("SPARK_GRAFT_TOTAL_PIN", "1")
     monkeypatch.delenv("SPARK_GRAFT_PIN_MODE", raising=False)
-    ck = engine.query(Q18).toPandas()
+    ck_df = engine.query(SHARE_OF_TOTAL)
+    # checkpointed: the lineage is cut at a LogicalRDD
+    assert "LogicalRDD" in ck_df._jdf.queryExecution().analyzed().toString()
+    ck = ck_df.toPandas()
     ck_cte = engine.query(CTE_ATTACH).toPandas()
     monkeypatch.setenv("SPARK_GRAFT_PIN_MODE", "persist")
-    ps_df = engine.query(Q18)
+    ps_df = engine.query(SHARE_OF_TOTAL)
+    # persisted: the pinned frame reads from the cache
+    assert "InMemoryRelation" in \
+        ps_df._jdf.queryExecution().optimizedPlan().toString()
     compare_frames(ps_df.toPandas(), ck, ordered=True)
     compare_frames(engine.query(CTE_ATTACH).toPandas(), ck_cte, ordered=True)
 
@@ -66,34 +68,6 @@ def test_pin_mode_invalid_raises(engine, monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_PIN_MODE", "bogus")
     with pytest.raises(ValueError, match="SPARK_GRAFT_PIN_MODE"):
         engine.query(CTE_ATTACH)
-
-
-# ------------------------------------------------ keyset cache scoping
-
-def test_keyset_cache_cleared_after_compile(engine, monkeypatch):
-    from sql_to_ibis_spark.plans.compiler import Compiler
-    from sql_to_ibis_spark.plans.parser import parse
-
-    monkeypatch.setenv("SPARK_GRAFT_IN_KEYSET_REDUCTION", "1")
-    comp = Compiler(engine.catalog, engine.spark)
-    comp.compile(parse(Q18))
-    # consumed-or-cleared either way: no stale id()-keyed entries survive
-    # the top-level compile (a recycled AST address in a later query must
-    # never hit a certified entry and skip its IN predicate)
-    assert not getattr(comp, "_in_keyset_cache", {})
-
-
-def test_keyset_cache_cleared_after_aborted_compile(engine, monkeypatch):
-    from sql_to_ibis_spark.errors import ColumnNotFoundError
-    from sql_to_ibis_spark.plans.compiler import Compiler
-    from sql_to_ibis_spark.plans.parser import parse
-
-    monkeypatch.setenv("SPARK_GRAFT_IN_KEYSET_REDUCTION", "1")
-    comp = Compiler(engine.catalog, engine.spark)
-    bad = Q18.replace("GROUP BY c_name", "GROUP BY no_such_col")
-    with pytest.raises(ColumnNotFoundError):
-        comp.compile(parse(bad))
-    assert not getattr(comp, "_in_keyset_cache", {})
 
 
 # --------------------------------------------------- JPEG bit reader
