@@ -15,6 +15,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from sql_to_ibis_spark.plans.options import env_name, gate_fields
+
 _ENGINES: dict = {}
 
 # The TPC-H-ish testdata's real key structure, declared RELY-style as a
@@ -50,13 +52,16 @@ FORCED_GATE_ENV = {
     # build-side keyset reduction's multiplicity gate
     "SPARK_GRAFT_SEMI_BUILD_KEYSET": "1",
     # both size gates of the constraint flag-join rewrite
-    "SPARK_GRAFT_CONSTRAINT_FLAG_MIN_ROWS": "0",
-    "SPARK_GRAFT_CONSTRAINT_FLAG_MAX_KEYS": "1e18",
+    "SPARK_GRAFT_CONSTRAINT_REWRITE": "1",
     "SPARK_GRAFT_TOTAL_PIN": "1",
-    # star semi reduction gates on Catalyst's file-size estimate, which
-    # inflated stats cannot move
-    "SPARK_GRAFT_SEMIJOIN_FACT_MIN": "0",
+    # both size gates of the star semi reduction: they read Catalyst's
+    # file-size estimate, which inflated stats cannot move
+    "SPARK_GRAFT_SEMIJOIN_REDUCTION": "1",
 }
+
+# Gates-off mode (scripts/check_oracle.py --gates-off): every rewrite
+# switch set to "0", so each entry runs the plan with no rewrite pass.
+OFF_GATE_ENV = {env_name(f): "0" for f in gate_fields()}
 
 
 def declare_constraints(eng) -> None:
@@ -142,7 +147,7 @@ def _engine_for(spark: SparkSession, sf_dir: str):
         # The planner uses them for constraint join rewrites: dropping
         # row-preserving dim joins and shrinking dim-predicate builds to
         # filtered keysets (q14 at sf10: 1.28 -> 0.46 s).
-        # SPARK_GRAFT_NO_CONSTRAINT_REWRITE=1 disables the rewrite;
+        # SPARK_GRAFT_CONSTRAINT_REWRITE=0 disables the rewrite;
         # SPARK_GRAFT_NO_CONSTRAINTS=1 skips the declarations entirely.
         if os.environ.get("SPARK_GRAFT_NO_CONSTRAINTS") != "1":
             try:

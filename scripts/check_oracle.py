@@ -2,7 +2,10 @@
 its oracle_sql() side-by-side at a given SF, compares row count + column
 names + order-insensitive values. Usage:
 
-    python scripts/check_oracle.py [sf_dir] [name_filter]
+    python scripts/check_oracle.py [--force-gates | --gates-off] [sf_dir] [name_filter]
+
+``--force-gates`` forces every stats-gated rewrite open on inflated stats;
+``--gates-off`` switches every rewrite off on the normal engine.
 """
 
 from __future__ import annotations
@@ -38,8 +41,15 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
 
 
 def main() -> int:
-    args = [a for a in sys.argv[1:] if a != "--force-gates"]
+    flags = {"--force-gates", "--gates-off"}
+    args = [a for a in sys.argv[1:] if a not in flags]
     force_gates = "--force-gates" in sys.argv[1:]
+    if "--gates-off" in sys.argv[1:]:
+        if force_gates:
+            sys.exit("--force-gates and --gates-off are exclusive")
+        # every rewrite pass off: the plan each entry gets with no
+        # rewrite at all must match the oracle too
+        os.environ.update(entrymod.OFF_GATE_ENV)
     sf_dir = args[0] if len(args) > 0 else "/root/testdata/sf0.01"
     name_filter = args[1] if len(args) > 1 else ""
     spark = get_spark(app_name="oracle_check")

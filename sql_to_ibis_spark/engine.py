@@ -21,6 +21,7 @@ from sql_to_ibis_spark.catalog import Catalog
 from sql_to_ibis_spark.errors import (ColumnNotFoundError,
                                       InvalidQueryException)
 from sql_to_ibis_spark.plans.compiler import Compiler
+from sql_to_ibis_spark.plans.options import PlannerOptions
 from sql_to_ibis_spark.plans.parser import parse
 
 
@@ -148,9 +149,8 @@ class SqlEngine:
     ) -> None:
         """Materialize a registered table as a BUCKETED managed table and
         swap the registration to read from it — the first-class deployment
-        path for the co-located-join layout (previously only reachable via
-        scripts/ab_q18_bucketed.py; measured there at sf10: q18 exchanges
-        3→0, −48%; q4 −46%; q21 −20%).
+        path for the co-located-join layout (measured at sf10, BASELINE.md:
+        q18 exchanges 3→0, −48%; q4 −46%; q21 −20%).
 
         Joins and aggregations keyed on ``bucket_cols`` between tables
         bucketed the same way (same cols, same ``num_buckets``) skip their
@@ -878,11 +878,13 @@ class SqlEngine:
         the ContextCleaner."""
         self.release_pinned()
         node = parse(sql)
+        # switches are parsed per query, not per engine
         return Compiler(self.catalog, self.spark,
                         user_functions=self.functions,
                         user_aggregates=self.aggregates,
                         user_table_functions=self.table_functions,
-                        pin_registry=self._pinned_frames).compile(node)
+                        pin_registry=self._pinned_frames,
+                        opts=PlannerOptions.from_env()).compile(node)
 
     def release_pinned(self) -> None:
         """Unpersist frames pinned (persist mode) by earlier queries.

@@ -36,7 +36,6 @@ EXCEPT follows standard set semantics (validated against the DuckDB oracle).
 from __future__ import annotations
 
 import itertools
-import os
 import re
 from dataclasses import dataclass, field
 
@@ -61,6 +60,7 @@ from sql_to_ibis_spark.functions.registry import (
     spark_type_for,
 )
 from sql_to_ibis_spark.plans import ast
+from sql_to_ibis_spark.plans.options import PlannerOptions
 
 
 def _bq(name: str) -> str:
@@ -197,9 +197,12 @@ class Compiler:
                  user_functions: dict[str, object] | None = None,
                  user_aggregates: dict[str, object] | None = None,
                  user_table_functions: dict[str, object] | None = None,
-                 pin_registry: list | None = None):
+                 pin_registry: list | None = None,
+                 opts: PlannerOptions = PlannerOptions()):
         self.catalog = catalog
         self.spark = spark
+        # the rewrite switches, parsed once per query by the engine
+        self.opts = opts
         # engine-owned list collecting frames persisted by _pin (persist
         # mode only) so the engine can unpersist them between queries —
         # without it a long-lived session accumulates cached grouped/CTE
@@ -262,7 +265,8 @@ class Compiler:
     def _pin(self, df: DataFrame) -> DataFrame:
         """Pin a bounded intermediate frame for reuse across plan branches.
 
-        ``SPARK_GRAFT_PIN_MODE`` selects the durability contract:
+        ``opts.pin_mode`` (``SPARK_GRAFT_PIN_MODE``) selects the
+        durability contract:
 
         - ``checkpoint`` (default): ``localCheckpoint(eager=False)`` —
           truncates lineage so AQE canonical-plan matching reuses ONE
@@ -278,8 +282,7 @@ class Compiler:
         read: the CTE under a CTE-scalar attach, and the grouped frame
         under a total-over-groups scalar (gated by _total_pin_wanted).
         """
-        mode = os.environ.get("SPARK_GRAFT_PIN_MODE", "checkpoint").lower()
-        if mode == "persist":
+        if self.opts.pin_mode == "persist":
             from pyspark import StorageLevel
 
             out = df.persist(StorageLevel.MEMORY_AND_DISK)
@@ -291,10 +294,6 @@ class Compiler:
                 # localCheckpoint blocks are owned by the ContextCleaner.
                 self._pin_registry.append(out)
             return out
-        if mode != "checkpoint":
-            raise ValueError(
-                f"SPARK_GRAFT_PIN_MODE must be 'checkpoint' or 'persist', "
-                f"got {mode!r}")
         return df.localCheckpoint(eager=False)
 
     def _compile_dispatch(
@@ -1059,8 +1058,8 @@ class Compiler:
         both COUNT(DISTINCT) and collect_set ignore NULLs. Gated at
         NDV ≤ 10k per column (collect_set buffers stay tiny even per
         group); approximate NDV's ±3% error is irrelevant at that
-        margin. ``SPARK_GRAFT_NO_SET_COUNT_DISTINCT=1`` disables."""
-        if os.environ.get("SPARK_GRAFT_NO_SET_COUNT_DISTINCT"):
+        margin. ``SPARK_GRAFT_SET_COUNT_DISTINCT=0`` disables."""
+        if self.opts.set_count_distinct is False:
             return
         if (len(node.relations) != 1
                 or not isinstance(node.relations[0], ast.TableRef)
@@ -1126,8 +1125,8 @@ class Compiler:
         DISTINCT/FILTER aggregates, decimal sums (precision widening
         under v·c would drift the result type), window functions,
         subqueries, and nondeterminism all bail.
-        ``SPARK_GRAFT_NO_PARSE_PER_DISTINCT=1`` disables."""
-        if os.environ.get("SPARK_GRAFT_NO_PARSE_PER_DISTINCT"):
+        ``SPARK_GRAFT_PARSE_PER_DISTINCT=0`` disables."""
+        if self.opts.parse_per_distinct is False:
             return None
         if (len(node.relations) != 1
                 or not isinstance(node.relations[0], ast.TableRef)
@@ -1352,7 +1351,7 @@ class Compiler:
         (their bodies are compiled in their own scope and may reference
         the merged-away alias), and any outer column that does not
         resolve to an inner output. SPARK_GRAFT_VIEW_MERGE=0 disables."""
-        if os.environ.get("SPARK_GRAFT_VIEW_MERGE") == "0":
+        if self.opts.view_merge is False:
             return None
         if len(node.relations) != 1 \
                 or not isinstance(node.relations[0], ast.SubqueryRef):
@@ -1552,9 +1551,9 @@ class Compiler:
           semi), shrinking the window input by the extra relation's
           selectivity (q2: part p_size=15 → 1/50 of partitions).
 
-        ``SPARK_GRAFT_NO_SHARED_WINDOW_DECORRELATE=1`` disables.
+        ``SPARK_GRAFT_SHARED_WINDOW_DECORRELATE=0`` disables.
         """
-        if os.environ.get("SPARK_GRAFT_NO_SHARED_WINDOW_DECORRELATE"):
+        if self.opts.shared_window_decorrelate is False:
             return None
         if node.where is None or len(node.relations) != 1 \
                 or not isinstance(node.relations[0], ast.Join):
@@ -2077,16 +2076,16 @@ class Compiler:
         names that could belong to D, D references inside subquery
         bodies, >2 distinct flag predicates, any non-equality join
         conjunct touching D, or a small dim (flag builds only pay from
-        SPARK_GRAFT_CONSTRAINT_FLAG_MIN_ROWS, default 1M rows) all keep
-        the stock plan.
-        ``SPARK_GRAFT_NO_CONSTRAINT_REWRITE=1`` disables.
+        _CONSTRAINT_FLAG_MIN_ROWS, 1M rows) all keep the stock plan.
+        ``SPARK_GRAFT_CONSTRAINT_REWRITE=0`` disables; ``=1`` skips the
+        two flag size gates (stats must still exist).
 
         The rewrite is deterministic per node shape (flag names number
         from 0 per query block), so the total-over-groups fingerprint
         still matches between an outer query and its scalar subquery
         when both rewrite identically.
         """
-        if os.environ.get("SPARK_GRAFT_NO_CONSTRAINT_REWRITE"):
+        if self.opts.constraint_rewrite is False:
             return None
         if len(node.relations) != 1 \
                 or not isinstance(node.relations[0], ast.Join):
@@ -2202,6 +2201,10 @@ class Compiler:
         return work
 
     _CONSTRAINT_FLAG_MAX = 2
+    # flag-join size gates: the dim's rows (lower) and each predicate's
+    # estimated keyset (upper); SPARK_GRAFT_CONSTRAINT_REWRITE=1 skips both
+    _CONSTRAINT_FLAG_MIN_ROWS = 1_000_000
+    _CONSTRAINT_FLAG_MAX_KEYS = 1e6
 
     def _constraint_try_candidate(
         self, work: ast.SelectNode, chain: list, conjs: list,
@@ -2443,13 +2446,10 @@ class Compiler:
             # flagged; part/orders-sized dims win: q14 −48%, q3 −17%,
             # q12 −13%). Pure elimination (no predicates) stays
             # ungated — it removes a semantically-dead join.
-            try:
-                min_rows = int(os.environ.get(
-                    "SPARK_GRAFT_CONSTRAINT_FLAG_MIN_ROWS", "1000000"))
-            except ValueError:
-                min_rows = 1_000_000
+            forced = self.opts.constraint_rewrite is True
             st = entry.stats
-            if st is None or st.rows < min_rows:
+            if st is None or (st.rows < self._CONSTRAINT_FLAG_MIN_ROWS
+                              and not forced):
                 return False
             # UPPER gate (r14, measured at sf100): the flag keyset is
             # broadcast, and broadcast builds cost per-ROW — q14's
@@ -2485,13 +2485,9 @@ class Compiler:
                 except Exception:
                     return 1.0
 
-            try:
-                max_keys = float(os.environ.get(
-                    "SPARK_GRAFT_CONSTRAINT_FLAG_MAX_KEYS", "1000000"))
-            except ValueError:
-                max_keys = 1e6
             for s_ in distinct.values():
-                if st.rows * sel(s_) > max_keys:
+                if not forced \
+                        and st.rows * sel(s_) > self._CONSTRAINT_FLAG_MAX_KEYS:
                     return False
 
         # ---- commit: build flag selects, replace subtrees, drop the join
@@ -2573,6 +2569,8 @@ class Compiler:
     # least fact rows per distinct join key for the LEFT-join fact
     # pre-aggregation to pay (see _try_left_fact_agg's gate)
     _LEFT_FACT_AGG_MIN_REDUCTION = 32.0
+    # least fact footer rows for eager aggregation, inner and LEFT-join
+    _EAGER_AGG_FACT_ROWS_MIN = 200_000
 
     def _try_left_fact_agg(self, node: ast.SelectNode) -> "ast.SelectNode | None":
         """LEFT-join fact aggregation pushdown (the q13 shape):
@@ -2603,7 +2601,7 @@ class Compiler:
         extensions, windows, DISTINCT aggregates, non-decomposable
         functions, more than one fact-dim equi edge.
 
-        Gate: fact footer rows ≥ SPARK_GRAFT_EAGER_AGG_FACT_ROWS_MIN and
+        Gate: fact footer rows ≥ _EAGER_AGG_FACT_ROWS_MIN and
         rows/NDV(key) ≥ _LEFT_FACT_AGG_MIN_REDUCTION (32, NDV
         required). The ratio matters more than it does for inner
         eager aggregation because the stock LEFT plan's join exchange
@@ -2613,10 +2611,9 @@ class Compiler:
         1.43 s vs rewrite 1.66 s, the map-side partial reduced only ~20%
         before the exchange. SPARK_GRAFT_LEFT_FACT_AGG=0 disables, =1
         forces."""
-        env = os.environ.get("SPARK_GRAFT_LEFT_FACT_AGG")
-        if env == "0":
+        if self.opts.left_fact_agg is False:
             return None
-        forced = env == "1"
+        forced = self.opts.left_fact_agg is True
         if (not node.group_by or node.group_mode is not None
                 or node.group_by_all or node.distinct or node.distinct_on
                 or node.qualify or node.windows
@@ -2800,10 +2797,8 @@ class Compiler:
 
         # ---- gates (stats pick the plan, never the answer) ----
         if not forced:
-            min_rows = int(os.environ.get(
-                "SPARK_GRAFT_EAGER_AGG_FACT_ROWS_MIN", "200000"))
             rows = fact_stats.rows if fact_stats is not None else 0
-            if not rows or rows < min_rows:
+            if not rows or rows < self._EAGER_AGG_FACT_ROWS_MIN:
                 return None
             ndv = (fact_stats.ndv or {}).get(fact_key_true.lower()) \
                 if getattr(fact_stats, "ndv", None) else None
@@ -2950,16 +2945,15 @@ class Compiler:
         them. SPARK_GRAFT_EAGER_AGG_FOLD_IN=0 disables just the fold.
 
         Gate: catalog-stats rows of the largest retained table ≥
-        SPARK_GRAFT_EAGER_AGG_FACT_ROWS_MIN (default 200k) and, when
+        _EAGER_AGG_FACT_ROWS_MIN (200k) and, when
         every inner group column has an NDV estimate, Π ndv ≤ rows/2
         (the rewrite buys nothing without reduction — stats only pick
         the plan, never the answer; a successful fold skips the NDV
         bail, since saving a whole fact scan pays regardless).
         SPARK_GRAFT_EAGER_AGG=1 forces, =0 disables."""
-        env = os.environ.get("SPARK_GRAFT_EAGER_AGG")
-        if env == "0":
+        if self.opts.eager_agg is False:
             return None
-        forced = env == "1"
+        forced = self.opts.eager_agg is True
         # empty group_by is allowed: a GLOBAL aggregate over a join (the
         # q14 shape) pushes down exactly like a grouped one — the inner
         # node groups by the attach keys, the outer re-aggregates with
@@ -3053,7 +3047,7 @@ class Compiler:
                      if node.where is not None else [])
         fold_cands: list[ast.InSubquery] = []
         where_conj = []
-        fold_on = os.environ.get("SPARK_GRAFT_EAGER_AGG_FOLD_IN") != "0"
+        fold_on = self.opts.eager_agg_fold_in is not False
         for c in all_where:
             if fold_on and self._eager_fold_in_candidate(c):
                 fold_cands.append(c)
@@ -3318,9 +3312,7 @@ class Compiler:
         fact_rows = max((st.rows for i, st in enumerate(stats)
                          if i in retained and st is not None), default=0)
         if not forced:
-            min_rows = int(os.environ.get(
-                "SPARK_GRAFT_EAGER_AGG_FACT_ROWS_MIN", "200000"))
-            if fact_rows < min_rows:
+            if fact_rows < self._EAGER_AGG_FACT_ROWS_MIN:
                 return None
             if not node.group_by and not fold_cands:
                 # a GLOBAL aggregate already reduces to one row per
@@ -3810,9 +3802,9 @@ class Compiler:
         under the broadcast cap. Closes the measured q3 gap where AQE
         converts the join at runtime but the 30M-row fact shuffle write
         has already happened. Hints only — a wrong estimate can cost
-        speed, never rows. ``SPARK_GRAFT_NO_STATS_BROADCAST=1``
+        speed, never rows. ``SPARK_GRAFT_STATS_BROADCAST=0``
         disables."""
-        if os.environ.get("SPARK_GRAFT_NO_STATS_BROADCAST"):
+        if self.opts.stats_broadcast is False:
             return {}
         if not node.relations or not any(
                 isinstance(r, ast.Join) for r in node.relations):
@@ -3862,9 +3854,9 @@ class Compiler:
 
         The attached temp column is excluded from the relation's visible
         columns (star expansion never sees it) and disappears at the
-        final projection. ``SPARK_GRAFT_NO_CTE_SCALAR_ATTACH=1``
+        final projection. ``SPARK_GRAFT_CTE_SCALAR_ATTACH=0``
         disables the rewrite."""
-        if os.environ.get("SPARK_GRAFT_NO_CTE_SCALAR_ATTACH"):
+        if self.opts.cte_scalar_attach is False:
             return {}
         if node.where is None or not node.relations or not self._cte_frames:
             return {}
@@ -4046,8 +4038,8 @@ class Compiler:
         the second execution at any group cardinality, and the r9
         cardinality gate stays gone.
 
-        ``SPARK_GRAFT_NO_GROUP_TOTAL_REWRITE=1`` disables the rewrite."""
-        if os.environ.get("SPARK_GRAFT_NO_GROUP_TOTAL_REWRITE"):
+        ``SPARK_GRAFT_GROUP_TOTAL_REWRITE=0`` disables the rewrite."""
+        if self.opts.group_total_rewrite is False:
             return None
         if not isinstance(sub, ast.SelectNode):
             return None
@@ -4305,10 +4297,9 @@ class Compiler:
         forced-gate oracle sweep can exercise the rewrite — uniform row
         inflation would otherwise CLOSE the dim-side ≤8M gate and leave
         this path untested."""
-        env = os.environ.get("SPARK_GRAFT_SINGLE_REL_MAGIC")
-        if node.where is None or env == "0":
+        if node.where is None or self.opts.single_rel_magic is False:
             return None
-        forced = env == "1"
+        forced = self.opts.single_rel_magic is True
         inner_rows = 0.0
         if sub is not None:
             stack: list[ast.Relation] = list(sub.relations)
@@ -4632,9 +4623,9 @@ class Compiler:
         let the caller pre-apply partition-complete WHERE conjuncts
         below the window.
 
-        ``SPARK_GRAFT_NO_WINDOW_DECORRELATE=1`` disables the rewrite
+        ``SPARK_GRAFT_WINDOW_DECORRELATE=0`` disables the rewrite
         (escape hatch + A/B measurement switch)."""
-        if os.environ.get("SPARK_GRAFT_NO_WINDOW_DECORRELATE"):
+        if self.opts.window_decorrelate is False:
             return None
         if outer_single is None or len(sub.relations) != 1:
             return None
@@ -4801,6 +4792,9 @@ class Compiler:
         visit(expr)
         return found
 
+    _SEMIJOIN_FACT_MIN = 64 << 20
+    _SEMIJOIN_DIM_MAX = 32 << 20
+
     def _plan_semi_reduction(
         self, node: ast.SelectNode
     ) -> dict[int, list[tuple[list[tuple[str, str]], DataFrame]]]:
@@ -4829,21 +4823,22 @@ class Compiler:
         deterministic — the standard table contract.
 
         Size gates (Catalyst plan-time estimates): facts ≥
-        SPARK_GRAFT_SEMIJOIN_FACT_MIN (default 64 MB) get reducers from
-        dimension chains whose every member is ≤ …_DIM_MAX (default 32 MB)
-        and whose chain carries at least one literal predicate. Below the
-        gate (test scale) the pass is a no-op, so small queries pay
-        nothing. SPARK_GRAFT_NO_SEMIJOIN_REDUCTION=1 disables it.
+        _SEMIJOIN_FACT_MIN (64 MB) get reducers from dimension chains
+        whose every member is ≤ _SEMIJOIN_DIM_MAX (32 MB) and whose chain
+        carries at least one literal predicate. Below the gate (test
+        scale) the pass is a no-op, so small queries pay nothing.
+        SPARK_GRAFT_SEMIJOIN_REDUCTION=0 disables it, =1 skips both size
+        gates (the forced-gate oracle sweep runs it).
 
         Returns {id(TableRef ast): [(pairs, reduced_dim_df)]} where pairs
         are (fact_col, dim_col) true names; applied in _compile_relation.
         """
-        if os.environ.get("SPARK_GRAFT_NO_SEMIJOIN_REDUCTION"):
+        if self.opts.semijoin_reduction is False:
             return {}
-        fact_min = int(os.environ.get(
-            "SPARK_GRAFT_SEMIJOIN_FACT_MIN", str(64 << 20)))
-        dim_max = int(os.environ.get(
-            "SPARK_GRAFT_SEMIJOIN_DIM_MAX", str(32 << 20)))
+        if self.opts.semijoin_reduction is True:
+            fact_min, dim_max = 0, float("inf")
+        else:
+            fact_min, dim_max = self._SEMIJOIN_FACT_MIN, self._SEMIJOIN_DIM_MAX
 
         base: list[tuple[ast.TableRef, DataFrame, bool]] = []
         conj_pool: list[ast.Expr] = []
@@ -5698,8 +5693,8 @@ class Compiler:
         ``COUNT(*)``) keeps the stock semi/anti joins. Measured sf10 and
         sf100 (interleaved): see OPTIMIZATION_r16.md.
         """
-        mode = os.environ.get("SPARK_GRAFT_NEQ_EXISTS_COLLAPSE", "")
-        if mode == "0" or node.where is None or not node.relations:
+        if (self.opts.neq_exists_collapse is False or node.where is None
+                or not node.relations):
             return None
         if (node.group_mode is not None or node.group_by_all
                 or node.distinct or node.distinct_on
@@ -5768,8 +5763,8 @@ class Compiler:
         if not members or not any(neg for _, neg, _ in members) \
                 or not any(not neg for _, neg, _ in members):
             return None  # need ≥1 negated (pin candidate) and ≥1 positive
-        if mode != "1" and (members[0][0]["stats_rows"] is None
-                            or members[0][0]["stats_rows"] < 1_000_000):
+        if self.opts.neq_exists_collapse is not True \
+                and (members[0][0]["stats_rows"] or 0) < 1_000_000:
             return None
 
         # ---- all members must target ONE outer self-table ref on the
@@ -6318,8 +6313,7 @@ class Compiler:
         (skips the stats gate; the forced-gate oracle sweep runs it).
         Returns the reduced build frame, or None to keep the stock join.
         """
-        flag = os.environ.get("SPARK_GRAFT_SEMI_BUILD_KEYSET")
-        if flag == "0":
+        if self.opts.semi_build_keyset is False:
             return None
         # the inner columns cond references: correlation conjuncts'
         # inner-side refs, plus (for IN) the selected item — all inner
@@ -6351,8 +6345,8 @@ class Compiler:
                 cols.append(self.compile_expr(ref, inner_scope))
         if not cols:
             return None
-        if flag != "1":
-            if os.environ.get("SPARK_GRAFT_NO_STATS_BROADCAST"):
+        if self.opts.semi_build_keyset is not True:
+            if self.opts.stats_broadcast is False:
                 return None
             # certification: every inner relation a stats-backed catalog
             # table (no CTEs/derived), the raw inner ≥ 4M rows, and the
@@ -6436,11 +6430,9 @@ class Compiler:
         no stats or an unestimatable shape the answer is no — exactly
         the conservatism that kept this opt-in before the estimator
         existed."""
-        flag = os.environ.get("SPARK_GRAFT_EXISTS_DEDUP_REWRITE")
-        if flag is not None:
-            return flag not in ("", "0")
-        if outer_node is None or os.environ.get(
-                "SPARK_GRAFT_NO_STATS_BROADCAST"):
+        if self.opts.exists_dedup_rewrite is not None:
+            return self.opts.exists_dedup_rewrite
+        if outer_node is None or self.opts.stats_broadcast is False:
             return False
         # automatic mode only trusts SINGLE-base-relation outers: their
         # row counts are exact and their widths honest. A joined outer's
@@ -6731,8 +6723,7 @@ class Compiler:
         ≥ g partitions) wins outright. ``SPARK_GRAFT_PREPART_AGG=0``
         disables, ``=1`` forces (skips the static gates but still
         requires plain column keys on a single scan)."""
-        mode = os.environ.get("SPARK_GRAFT_PREPART_AGG", "")
-        if mode == "0":
+        if self.opts.prepart_agg is False:
             return df
         if (len(node.relations) != 1
                 or not isinstance(node.relations[0], ast.TableRef)):
@@ -6748,8 +6739,8 @@ class Compiler:
             # Measured sf10 (3.0M filtered rows, ~1.5M custkey groups,
             # interleaved): 0.52 → 0.42 s (−20%).
             return self._maybe_prepartition_agg_cte(
-                df, node.relations[0].name.lower(), group_by, keys, mode)
-        if mode != "1":
+                df, node.relations[0].name.lower(), group_by, keys)
+        if self.opts.prepart_agg is not True:
             try:
                 entry = self.catalog.get(node.relations[0].name)
             except Exception:
@@ -6775,7 +6766,7 @@ class Compiler:
 
     def _maybe_prepartition_agg_cte(
         self, df: DataFrame, cname: str,
-        group_by: list[ast.Expr], keys: list[dict], mode: str
+        group_by: list[ast.Expr], keys: list[dict]
     ) -> DataFrame:
         """The :meth:`_maybe_prepartition_agg` rewrite when the single
         FROM relation is a CTE: admitted only for a row-preserving
@@ -6812,7 +6803,7 @@ class Compiler:
             if b is None:
                 return df
             key_base.append(b)
-        if mode != "1":
+        if self.opts.prepart_agg is not True:
             try:
                 from sql_to_ibis_spark.plans.estimator import \
                     CardinalityEstimator
@@ -6858,9 +6849,8 @@ class Compiler:
         scale the unpinned form runs the whole scan+join+shuffle twice,
         since AQE canonical-stage matching does not unify the two
         consumers on this Spark version)."""
-        flag = os.environ.get("SPARK_GRAFT_TOTAL_PIN")
-        if flag is not None:
-            return flag not in ("", "0")
+        if self.opts.total_pin is not None:
+            return self.opts.total_pin
         stack: list = list(node.relations)
         while stack:
             rel = stack.pop()
@@ -7294,8 +7284,10 @@ class Compiler:
         ASC and DESC (one struct comparison cannot flip direction per
         field), the FROM clause has several relations (the struct
         round-trip drops per-relation aliases, breaking qualified
-        select refs), or the input carries duplicate column names."""
-        if len(scope.relations) != 1:
+        select refs), or the input carries duplicate column names.
+        ``SPARK_GRAFT_DISTINCT_ON_AGG=0`` always keeps the window form;
+        ``=1`` skips the heap-pressure gate below."""
+        if self.opts.distinct_on_agg is False or len(scope.relations) != 1:
             return None
         if len(set(c.lower() for c in df.columns)) != len(df.columns):
             return None
@@ -7358,33 +7350,28 @@ class Compiler:
         # ~half the per-task execution memory, fall back to the window
         # form (always correct, spills gracefully). Unknown stats keep
         # the aggregate (driver-scale inputs are far below the line).
-        # SPARK_GRAFT_DISTINCT_ON_AGG_MAX_TASK_BYTES overrides the
-        # derived budget for non-local deployments.
+        # SPARK_GRAFT_DISTINCT_ON_AGG=1 skips this gate; =0 keeps the
+        # window form for every DISTINCT ON.
         try:
             rel0 = node.relations[0] if len(node.relations) == 1 else None
             st = (self.catalog.get(rel0.name).stats
                   if isinstance(rel0, ast.TableRef) else None)
         except Exception:
             st = None
-        if st is not None and st.rows:
+        if st is not None and st.rows and self.opts.distinct_on_agg is None:
             cb = getattr(st, "col_bytes", None) or {}
             width = 16 + sum(max(cb.get(c.lower(), 0.0), 8.0) for c in keep)
             parts = max(int(self.spark.conf.get(
                 "spark.sql.shuffle.partitions", "200")), 1)
-            budget = os.environ.get(
-                "SPARK_GRAFT_DISTINCT_ON_AGG_MAX_TASK_BYTES")
-            if budget is not None:
-                per_task_budget = float(budget)
-            else:
-                try:
-                    heap = float(self.spark.sparkContext._jvm.java.lang
-                                 .Runtime.getRuntime().maxMemory())
-                except Exception:
-                    heap = 8.0 * (1 << 30)
-                cores = max(self.spark.sparkContext.defaultParallelism, 1)
-                # unified-memory fraction 0.6, half of it as the safe
-                # working set for one task's aggregate buffer
-                per_task_budget = heap * 0.6 / cores * 0.5
+            try:
+                heap = float(self.spark.sparkContext._jvm.java.lang
+                             .Runtime.getRuntime().maxMemory())
+            except Exception:
+                heap = 8.0 * (1 << 30)
+            cores = max(self.spark.sparkContext.defaultParallelism, 1)
+            # unified-memory fraction 0.6, half of it as the safe
+            # working set for one task's aggregate buffer
+            per_task_budget = heap * 0.6 / cores * 0.5
             if st.rows * width / parts > per_task_budget:
                 return None
         ascending = residual[0].ascending
@@ -7686,8 +7673,8 @@ class Compiler:
         * non-decomposable aggregates (avg/stddev/count DISTINCT/user
           UDAFs) or aggregates the compiler synthesized without an AST.
 
-        ``SPARK_GRAFT_NO_GROUPING_PREAGG=1`` disables the rewrite."""
-        if os.environ.get("SPARK_GRAFT_NO_GROUPING_PREAGG"):
+        ``SPARK_GRAFT_GROUPING_PREAGG=0`` disables the rewrite."""
+        if self.opts.grouping_preagg is False:
             return None
         if not low_card_groups:
             return None

@@ -18,7 +18,7 @@ under the size cap — a wrong hint can slow a query, never change its
 rows. Anything the estimator cannot price exactly-enough (CTEs, derived
 tables, table functions, unresolvable conjuncts) poisons its subtree to
 "unknown", and unknown sides are never hinted. Kill-switch:
-``SPARK_GRAFT_NO_STATS_BROADCAST=1``.
+``SPARK_GRAFT_STATS_BROADCAST=0``.
 """
 
 from __future__ import annotations

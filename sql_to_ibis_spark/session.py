@@ -48,11 +48,11 @@ def get_spark(app_name: str = "sql_to_ibis_spark",
         # Prefer shuffled-hash over sort-merge when a side can build a
         # local hash map (Spark still falls back to SMJ otherwise, and AQE
         # skew-splitting keeps build sides bounded): skips sorting the big
-        # shuffled side. Interleaved A/B at sf10 (scripts/ab_shj.py): q13
+        # shuffled side. Interleaved A/B at sf10 (BASELINE.md): q13
         # −27%, q5 −21%, dedup_exact −15%, q7 −13%, q21 −12%, q18/q3/
         # multiway within noise — no regressions across two sweeps.
         # To restore the sort-merge preference, set this conf on the
-        # session (as scripts/ab_shj.py does).
+        # session, e.g. ab.py arm smj:spark.sql.join.preferSortMergeJoin=true
         .config("spark.sql.join.preferSortMergeJoin", "false")
         # Arrow for any pandas interchange (UDF paths, toPandas)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

@@ -1,8 +1,8 @@
 """First-class bucketed layout (SqlEngine.snapshot_bucketed): the
 engine writes a registered table as a bucketed managed table and swaps
 the registration, so joins/aggregations on the bucket key skip their
-shuffle exchanges. Promoted from scripts/ab_q18_bucketed.py (measured
-there at sf10: q18 exchanges 3→0, wall −48%) per the round-8 judge.
+shuffle exchanges. Promoted from an A/B script (measured at sf10,
+BASELINE.md: q18 exchanges 3→0, wall −48%).
 Tests pin exchange elimination on the q18 shape AND result equality.
 """
 

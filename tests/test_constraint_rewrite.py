@@ -15,7 +15,7 @@ Soundness contract under test:
   names, subquery bodies) keeps the stock join.
 
 Every positive case asserts plan shape AND value equality against the
-un-rewritten plan (same engine, SPARK_GRAFT_NO_CONSTRAINT_REWRITE=1).
+un-rewritten plan (same engine, SPARK_GRAFT_CONSTRAINT_REWRITE=0).
 """
 
 from __future__ import annotations
@@ -53,13 +53,13 @@ WHERE_PRED = """
 @pytest.fixture(scope="module")
 def ceng(spark) -> SqlEngine:
     """A constrained engine over the same testdata (separate instance so
-    the shared session fixture's plans stay stock). The flag-size gate
-    opens via env — at sf0.001 every dim is tiny, and these tests pin
-    the rewrite mechanics, not the profitability gate (which
+    the shared session fixture's plans stay stock). Both flag-size gates
+    are forced open via env — at sf0.001 every dim is tiny, and these
+    tests pin the rewrite mechanics, not the profitability gates (which
     test_flag_size_gate covers)."""
     import os
 
-    os.environ["SPARK_GRAFT_CONSTRAINT_FLAG_MIN_ROWS"] = "0"
+    os.environ["SPARK_GRAFT_CONSTRAINT_REWRITE"] = "1"
     eng = SqlEngine(spark)
     eng.register_dir(SF_DIR)
     for t, c in (("part", "p_partkey"), ("supplier", "s_suppkey"),
@@ -75,7 +75,7 @@ def ceng(spark) -> SqlEngine:
                     ("orders", "o_custkey", "customer")):
         eng.add_foreign_key(t, c, r)
     yield eng
-    os.environ.pop("SPARK_GRAFT_CONSTRAINT_FLAG_MIN_ROWS", None)
+    os.environ.pop("SPARK_GRAFT_CONSTRAINT_REWRITE", None)
 
 
 def _plan(eng, sql: str) -> str:
@@ -83,10 +83,9 @@ def _plan(eng, sql: str) -> str:
 
 
 def _stock(eng, sql, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_NO_CONSTRAINT_REWRITE", "1")
-    out = eng.query(sql).toPandas()
-    monkeypatch.delenv("SPARK_GRAFT_NO_CONSTRAINT_REWRITE")
-    return out
+    with monkeypatch.context() as m:
+        m.setenv("SPARK_GRAFT_CONSTRAINT_REWRITE", "0")
+        return eng.query(sql).toPandas()
 
 
 def test_declared_constraints_hold_on_testdata(ceng):
@@ -187,7 +186,7 @@ def test_unconstrained_engine_unchanged(engine):
 
 
 def test_kill_switch(ceng, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_NO_CONSTRAINT_REWRITE", "1")
+    monkeypatch.setenv("SPARK_GRAFT_CONSTRAINT_REWRITE", "0")
     assert "part.parquet" in _plan(ceng, DEAD_JOIN)
 
 
@@ -236,8 +235,7 @@ def test_flag_size_gate(spark, monkeypatch):
     # cost); tiny dims keep their scan-filter form so the transitive
     # filtered-dim-chain fact reduction keeps firing (measured sf10:
     # flagging nation/region cost q5 +224%, q8 +147%)
-    monkeypatch.delenv("SPARK_GRAFT_CONSTRAINT_FLAG_MIN_ROWS",
-                       raising=False)
+    monkeypatch.delenv("SPARK_GRAFT_CONSTRAINT_REWRITE", raising=False)
     eng = SqlEngine(spark)
     eng.register_dir(SF_DIR)
     eng.add_primary_key("part", "p_partkey")

@@ -207,13 +207,13 @@ class TestRewritePlans:
                              ids=["default", "no_window_decorrelate"])
     def test_window_decorrelate_switch(self, engine, oracle, monkeypatch,
                                        switch_off):
-        # SPARK_GRAFT_NO_WINDOW_DECORRELATE=1 turns the window rewrite
+        # SPARK_GRAFT_WINDOW_DECORRELATE=0 turns the window rewrite
         # off for the q17 self-comparison shape: no Window in the plan,
         # and both plans give DuckDB's answer
         if switch_off:
-            monkeypatch.setenv("SPARK_GRAFT_NO_WINDOW_DECORRELATE", "1")
+            monkeypatch.setenv("SPARK_GRAFT_WINDOW_DECORRELATE", "0")
         else:
-            monkeypatch.delenv("SPARK_GRAFT_NO_WINDOW_DECORRELATE",
+            monkeypatch.delenv("SPARK_GRAFT_WINDOW_DECORRELATE",
                                raising=False)
         plan = plan_of(engine.query(self.Q17_SELF), "simple")
         assert ("Window" in plan) != switch_off, plan
@@ -369,7 +369,7 @@ class TestSingleRelationMagicSet:
     def test_fires_and_matches_oracle(self, big_engine, ddb, monkeypatch):
         # the join-path magic set is still the fallback when the window
         # rewrite is off — pin it behind that switch
-        monkeypatch.setenv("SPARK_GRAFT_NO_SHARED_WINDOW_DECORRELATE", "1")
+        monkeypatch.setenv("SPARK_GRAFT_SHARED_WINDOW_DECORRELATE", "0")
         on = self._semi_count(big_engine, self.Q2ISH)
         monkeypatch.setenv("SPARK_GRAFT_SINGLE_REL_MAGIC", "0")
         off = self._semi_count(big_engine, self.Q2ISH)
@@ -380,7 +380,7 @@ class TestSingleRelationMagicSet:
 
     def test_small_inner_bails(self, engine, monkeypatch):
         # session engine keeps the REAL (tiny) footer stats → scale gate
-        monkeypatch.setenv("SPARK_GRAFT_NO_SHARED_WINDOW_DECORRELATE", "1")
+        monkeypatch.setenv("SPARK_GRAFT_SHARED_WINDOW_DECORRELATE", "0")
         on = self._semi_count(engine, self.Q2ISH)
         monkeypatch.setenv("SPARK_GRAFT_SINGLE_REL_MAGIC", "0")
         off = self._semi_count(engine, self.Q2ISH)
@@ -388,7 +388,7 @@ class TestSingleRelationMagicSet:
 
     def test_weak_conjunct_bails(self, big_engine, monkeypatch):
         # <> keeps ~everything: not shape-selective, restriction skipped
-        monkeypatch.setenv("SPARK_GRAFT_NO_SHARED_WINDOW_DECORRELATE", "1")
+        monkeypatch.setenv("SPARK_GRAFT_SHARED_WINDOW_DECORRELATE", "0")
         q = self.Q2ISH.replace("p.p_size = 15", "p.p_size <> 15")
         on = self._semi_count(big_engine, q)
         monkeypatch.setenv("SPARK_GRAFT_SINGLE_REL_MAGIC", "0")

@@ -61,7 +61,7 @@ def test_q15_shape_single_cte_execution(engine, oracle):
 
 def test_rewrite_off_matches(engine, monkeypatch):
     before = engine.query(Q15_STYLE).toPandas()
-    monkeypatch.setenv("SPARK_GRAFT_NO_CTE_SCALAR_ATTACH", "1")
+    monkeypatch.setenv("SPARK_GRAFT_CTE_SCALAR_ATTACH", "0")
     assert lineitem_scans(engine, Q15_STYLE) == 2
     after = engine.query(Q15_STYLE).toPandas()
     compare_frames(before, after, ordered=True)

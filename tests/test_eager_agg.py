@@ -8,7 +8,7 @@ the case that breaks join-then-skip-reagg formulations.
 
 SPARK_GRAFT_EAGER_AGG=1 forces on, =0 forces off; unset → automatic
 when catalog stats show the largest retained table ≥
-SPARK_GRAFT_EAGER_AGG_FACT_ROWS_MIN rows (default 200k) and the inner
+Compiler._EAGER_AGG_FACT_ROWS_MIN rows (200k) and the inner
 group columns' NDV product promises ≥2× reduction.
 """
 

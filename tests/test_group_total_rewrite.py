@@ -85,7 +85,7 @@ def test_q11_shape_string_key_rewrites_to_single_pass(engine, oracle):
 
 def test_rewrite_off_matches(engine, monkeypatch):
     before = engine.query(Q11_STRING_KEY).toPandas()
-    monkeypatch.setenv("SPARK_GRAFT_NO_GROUP_TOTAL_REWRITE", "1")
+    monkeypatch.setenv("SPARK_GRAFT_GROUP_TOTAL_REWRITE", "0")
     # static double compile: the join tree is scanned twice (4 scans);
     # (runtime may still reuse the small-side BROADCAST exchange, so the
     # negative pin is the static scan count, not reuse absence)

@@ -51,7 +51,7 @@ def test_json_agg_rewrites_and_matches(engine, ddb, monkeypatch):
     got = engine.query(JSON_AGG).toPandas()
     exp = ddb.execute(JSON_AGG_ORACLE).fetchdf()
     compare_frames(got, exp, ordered=True)
-    monkeypatch.setenv("SPARK_GRAFT_NO_PARSE_PER_DISTINCT", "1")
+    monkeypatch.setenv("SPARK_GRAFT_PARSE_PER_DISTINCT", "0")
     assert not fired(engine, JSON_AGG)
     off = engine.query(JSON_AGG).toPandas()
     compare_frames(got, off, ordered=True)
@@ -134,7 +134,7 @@ def test_qualified_columns_rewrite_and_match(engine, ddb, monkeypatch):
     exp = ddb.execute(sql.replace("get_json_object",
                                   "json_extract_string")).fetchdf()
     compare_frames(got, exp, ordered=True)
-    monkeypatch.setenv("SPARK_GRAFT_NO_PARSE_PER_DISTINCT", "1")
+    monkeypatch.setenv("SPARK_GRAFT_PARSE_PER_DISTINCT", "0")
     off = engine.query(sql).toPandas()
     compare_frames(got, off, ordered=True)
 

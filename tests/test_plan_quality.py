@@ -139,7 +139,7 @@ def test_explicit_broadcast_hint(engine, spark, monkeypatch):
     planner wouldn't pick one (Spark threshold disabled AND the footer-
     stats planner off — the r7 stats planner would otherwise hint the
     nation side on its own, which is exactly its job)."""
-    monkeypatch.setenv("SPARK_GRAFT_NO_STATS_BROADCAST", "1")
+    monkeypatch.setenv("SPARK_GRAFT_STATS_BROADCAST", "0")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         unhinted = engine.query(
@@ -248,7 +248,7 @@ def test_grouping_sets_preagg_rewrite(engine, monkeypatch):
     assert "HashAggregate" in plan[i:], plan
     assert plan.count("Scan") == 1, plan
     # values must be identical to the Expand plan
-    monkeypatch.setenv("SPARK_GRAFT_NO_GROUPING_PREAGG", "1")
+    monkeypatch.setenv("SPARK_GRAFT_GROUPING_PREAGG", "0")
     expanded = engine.query(sql)
     key = lambda r: tuple((v is None, v) for v in r)  # noqa: E731
     a = sorted(map(tuple, df.collect()), key=key)

@@ -27,7 +27,7 @@ CMPS = ["=", "<>", "<", ">="]
 
 @pytest.fixture(scope="module")
 def ceng(spark):
-    os.environ["SPARK_GRAFT_CONSTRAINT_FLAG_MIN_ROWS"] = "0"
+    os.environ["SPARK_GRAFT_CONSTRAINT_REWRITE"] = "1"
     eng = SqlEngine(spark)
     eng.register_dir(SF_DIR)
     for t, c in (("part", "p_partkey"), ("supplier", "s_suppkey"),
@@ -38,7 +38,7 @@ def ceng(spark):
                     ("lineitem", "l_orderkey", "orders")):
         eng.add_foreign_key(t, c, r)
     yield eng
-    os.environ.pop("SPARK_GRAFT_CONSTRAINT_FLAG_MIN_ROWS", None)
+    os.environ.pop("SPARK_GRAFT_CONSTRAINT_REWRITE", None)
 
 
 def _check(ceng, ddb, sql):

@@ -83,7 +83,12 @@ def test_distinct_on_agg_heap_gate(spark, monkeypatch):
     st.rows = 100_000_000_000
     plan = eng.query(sql)._jdf.queryExecution().optimizedPlan().toString()
     assert "max_by" not in plan and "row_number" in plan, plan
-    # explicit budget override re-opens the gate
-    monkeypatch.setenv("SPARK_GRAFT_DISTINCT_ON_AGG_MAX_TASK_BYTES", "1e18")
+    # forcing the aggregate arm skips the gate
+    monkeypatch.setenv("SPARK_GRAFT_DISTINCT_ON_AGG", "1")
     plan = eng.query(sql)._jdf.queryExecution().optimizedPlan().toString()
     assert "max_by" in plan, plan
+    # switched off, small stats keep the window form too
+    st.rows = 1_000
+    monkeypatch.setenv("SPARK_GRAFT_DISTINCT_ON_AGG", "0")
+    plan = eng.query(sql)._jdf.queryExecution().optimizedPlan().toString()
+    assert "max_by" not in plan and "row_number" in plan, plan

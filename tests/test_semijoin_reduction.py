@@ -31,8 +31,7 @@ WHERE r.r_name = 'ASIA' GROUP BY n.n_name ORDER BY revenue DESC
 @pytest.fixture
 def forced(monkeypatch):
     """Force the pass on regardless of table size (test data is tiny)."""
-    monkeypatch.setenv("SPARK_GRAFT_SEMIJOIN_FACT_MIN", "1")
-    monkeypatch.setenv("SPARK_GRAFT_SEMIJOIN_DIM_MAX", str(1 << 40))
+    monkeypatch.setenv("SPARK_GRAFT_SEMIJOIN_REDUCTION", "1")
 
 
 def test_noop_below_size_gates(engine):
@@ -43,9 +42,9 @@ def test_noop_below_size_gates(engine):
 
 
 def test_reduction_fires_and_preserves_results(engine, forced, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_NO_SEMIJOIN_REDUCTION", "1")
+    monkeypatch.setenv("SPARK_GRAFT_SEMIJOIN_REDUCTION", "0")
     baseline = sorted(map(tuple, engine.query(Q5).collect()))
-    monkeypatch.delenv("SPARK_GRAFT_NO_SEMIJOIN_REDUCTION")
+    monkeypatch.setenv("SPARK_GRAFT_SEMIJOIN_REDUCTION", "1")
     plan = plan_of(engine.query(Q5), "simple")
     assert "LeftSemi" in plan
     assert "BroadcastExchange" in plan

@@ -22,7 +22,7 @@ def test_rewrite_matches_and_drops_expand(engine, monkeypatch):
     engine.analyze()
     assert "Expand" not in engine.explain(SQL)
     on = engine.query(SQL).toPandas()
-    monkeypatch.setenv("SPARK_GRAFT_NO_SET_COUNT_DISTINCT", "1")
+    monkeypatch.setenv("SPARK_GRAFT_SET_COUNT_DISTINCT", "0")
     assert "Expand" in engine.explain(SQL)
     off = engine.query(SQL).toPandas()
     compare_frames(on, off)

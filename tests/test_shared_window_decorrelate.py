@@ -50,9 +50,9 @@ def _plan(engine, sql: str) -> str:
 
 
 def _ab(engine, sql, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_NO_SHARED_WINDOW_DECORRELATE", "1")
+    monkeypatch.setenv("SPARK_GRAFT_SHARED_WINDOW_DECORRELATE", "0")
     stock = engine.query(sql).toPandas()
-    monkeypatch.delenv("SPARK_GRAFT_NO_SHARED_WINDOW_DECORRELATE")
+    monkeypatch.delenv("SPARK_GRAFT_SHARED_WINDOW_DECORRELATE")
     rewritten = engine.query(sql).toPandas()
     return stock, rewritten
 

@@ -221,6 +221,6 @@ def test_analyze_fills_ndv_and_results_unchanged(engine, monkeypatch):
     st = engine.catalog.get("orders").stats
     assert st is not None and st.ndv.get("o_orderstatus", 0) >= 1
     with_hints = engine.query(sql).toPandas()
-    monkeypatch.setenv("SPARK_GRAFT_NO_STATS_BROADCAST", "1")
+    monkeypatch.setenv("SPARK_GRAFT_STATS_BROADCAST", "0")
     without = engine.query(sql).toPandas()
     compare_frames(with_hints, without, ordered=True)
