@@ -125,7 +125,9 @@ def _plan_fp(df) -> str:
     annotations normalized away, so the same logical plan fingerprints
     identically across sessions. Used by the integrity guard to tell
     'this entry got slower at an UNCHANGED plan' (ambient load — re-run
-    it) from 'the plan changed' (a code change — believe the number)."""
+    it) from 'the plan changed' (a code change — believe the number).
+    Scanned paths keep their file names but not their directories, so two
+    checkouts (data dir, warehouse) fingerprint one plan the same."""
     import contextlib
     import hashlib
     import io
@@ -139,6 +141,10 @@ def _plan_fp(df) -> str:
     t = re.sub(r"\[plan_id=\d+\]", "", t)
     t = re.sub(r"\(\d+\)", "(n)", t)
     t = re.sub(r"Statistics\([^)]*\)", "Statistics()", t)
+    t = re.sub(r"^Location: .*$",
+               lambda m: re.sub(r"(?<=[\[ ,])(\w+:)?/(?:[^/\s,\]]*/)*",
+                                "<dir>/", m.group()),
+               t, flags=re.M)
     return hashlib.sha1(t.encode()).hexdigest()[:12]
 
 

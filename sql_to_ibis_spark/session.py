@@ -81,6 +81,15 @@ def get_spark(app_name: str = "sql_to_ibis_spark",
         # parquet TIMESTAMP(NANOS) is otherwise unreadable; sources/readers.py
         # converts the long nanos back to TimestampType JVM-side
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # No DataFrame call-site capture. PySpark records, for every
+        # functions/Column/DataFrame call, the Python line that made it:
+        # four extra Py4J round trips, a stack walk and an IPython import
+        # per call, about 70 % of the engine's Py4J calls while it builds
+        # a plan (tpch_q6: 729 → 209). The line it records is one in the
+        # compiler or an operator, which tells a SQL user nothing; the
+        # engine's own errors name the SQL. A static conf: it must be set
+        # before the session starts, and PySpark reads it once per process.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         # UI off by default (driver/bench runs); SPARK_GRAFT_UI=1 enables
         # it so instrumentation scripts can read per-stage spill/GC/peak-
@@ -112,10 +121,10 @@ def map_concurrently(spark: SparkSession, fn: Callable[[T], R],
         return []
 
     def call(x: T) -> R:
-        # the JVM keeps the active session per thread, and both Spark's
-        # conf lookup and PySpark read it (PySpark decides from it, once
-        # per process, whether to record DataFrame call sites: a thread
-        # without one would turn that off for every later query)
+        # the JVM keeps the active session per thread, and Spark's conf
+        # lookup reads it: a thread without one would plan with the
+        # default confs, not this session's (parquet schema inference
+        # would not see nanosAsLong, say)
         spark._jvm.SparkSession.setActiveSession(spark._jsparkSession)
         return fn(x)
 

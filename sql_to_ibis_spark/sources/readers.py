@@ -11,15 +11,22 @@ with ``spark.sql.legacy.parquet.nanosAsLong=true`` the column arrives as a
 raw long which we convert to ``TimestampType`` JVM-side via integer division
 (``div 1000`` — micros), keeping full codegen and avoiding any Python/driver
 round-trip.
+
+Opening a parquet file makes Spark infer its schema, and that is a Spark job.
+The schema of a regular file is memoized per path, under the file's identity
+(size, mtime, inode) and the confs that change what inference returns, so a
+file read again, or read after ``register_dir`` read it, starts no job.
 """
 
 from __future__ import annotations
 
 import glob
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from sql_to_ibis_spark.session import map_concurrently
 
@@ -40,8 +47,45 @@ def _nanos_timestamp_columns(path: str) -> list[str]:
     return out
 
 
+# the session confs that change the schema Spark infers from a footer
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+)
+# realpath -> ((st_size, st_mtime_ns, st_ino, conf values), StructType).
+# One entry per path: a rewritten file replaces its own entry. Shared by
+# every session in the process, which the conf values in the key make safe.
+# Threads of map_concurrently only get and set whole entries; two that miss
+# on one path both infer it, and either result is right.
+_SCHEMAS: dict[str, tuple[tuple, T.StructType]] = {}
+
+
+def _read(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, with the schema Spark inferred the last
+    time this regular file was read, unchanged and under the same confs,
+    passed in so that no inference job runs. A directory is always
+    inferred: its files can change without its own stat changing."""
+    real = os.path.realpath(path)
+    try:
+        st = os.stat(real)
+    except OSError:
+        st = None
+    if st is None or not stat.S_ISREG(st.st_mode):
+        return spark.read.parquet(path)
+    key = (st.st_size, st.st_mtime_ns, st.st_ino,
+           tuple(spark.conf.get(k) for k in _INFERENCE_CONFS))
+    hit = _SCHEMAS.get(real)
+    if hit is not None and hit[0] == key:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[real] = (key, df.schema)
+    return df
+
+
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    return _engine_types(spark.read.parquet(path), path)
+    return _engine_types(_read(spark, path), path)
 
 
 def _engine_types(df: DataFrame, path: str) -> DataFrame:
@@ -67,8 +111,6 @@ def _engine_types(df: DataFrame, path: str) -> DataFrame:
     # arrive as TIMESTAMP_NTZ, which Spark refuses for event-time watermarks
     # and which would diverge from the engine's TimestampType surface. The
     # session runs in UTC, so the NTZ→TZ cast is value-exact.
-    from pyspark.sql import types as T
-
     for fld in df.schema.fields:
         if isinstance(fld.dataType, T.TimestampNTZType):
             df = df.withColumn(fld.name, F.col(fld.name).cast("timestamp"))
@@ -94,13 +136,15 @@ def read_table_dir(
     """Load every ``<name>.parquet`` under a directory (the /root/testdata
     layout) → {name: DataFrame}, in name order, as ``read_parquet`` does.
     Schema inference, a Spark job per file, runs concurrently; the type
-    fix-ups are Python-side work and stay in the caller's thread."""
+    fix-ups are Python-side work and stay in the caller's thread. Each
+    file's schema is memoized, so ``read_parquet`` of it later starts no
+    job."""
     paths: dict[str, str] = {}
     for p in sorted(glob.glob(os.path.join(sf_dir, "*.parquet"))):
         name = os.path.splitext(os.path.basename(p))[0]
         if tables is None or name in tables:
             paths[name] = p
     frames = map_concurrently(
-        spark, lambda path: spark.read.parquet(path), paths.values())
+        spark, lambda path: _read(spark, path), paths.values())
     return {name: _engine_types(df, path)
             for (name, path), df in zip(paths.items(), frames)}
