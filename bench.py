@@ -127,7 +127,11 @@ def _plan_fp(df) -> str:
     'this entry got slower at an UNCHANGED plan' (ambient load — re-run
     it) from 'the plan changed' (a code change — believe the number).
     Scanned paths keep their file names but not their directories, so two
-    checkouts (data dir, warehouse) fingerprint one plan the same."""
+    checkouts (data dir, warehouse) fingerprint one plan the same. A
+    checkpointed frame's RDD (``MapPartitionsRDD[113] at localCheckpoint
+    at ...``: a session counter and a call site that reflection inflation
+    rewrites) reads as one token; lambda variables (``x_12``, from a
+    JVM-wide counter) are numbered by first appearance."""
     import contextlib
     import hashlib
     import io
@@ -137,6 +141,12 @@ def _plan_fp(df) -> str:
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")
     t = buf.getvalue()
+    t = re.sub(r"\b\w*RDD\[\d+\] at [^,\]\n]*", "<rdd>", t)
+    lambdas: dict[str, str] = {}
+    t = re.sub(r"\blambda (\w+?)_\d+\b",
+               lambda m: lambdas.setdefault(
+                   m.group(), f"lambda {m.group(1)}_{len(lambdas)}"),
+               t)
     t = re.sub(r"#\d+", "#x", t)
     t = re.sub(r"\[plan_id=\d+\]", "", t)
     t = re.sub(r"\(\d+\)", "(n)", t)

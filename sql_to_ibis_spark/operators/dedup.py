@@ -360,12 +360,10 @@ def minhash_signature(
     return _minhash_sig_udf(num_hashes, shingle_size)(_token_hashes(text_col))
 
 
-def _lsh_pairs_from_sig(
-    sig: DataFrame, num_hashes: int = 64, bands: int = 16
-) -> DataFrame:
-    """Banded bucket join over an (already persisted) ``(id, sig)`` table →
-    ``(id_a, id_b, n_matching_bands)``. Ids sharing any (band, band-hash)
-    bucket pair up; cost is per-bucket quadratic, never all-pairs."""
+def _lsh_bands(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
+    """``(id, sig)`` → ``(id, band, bh)``: one row per band, ``bh`` the
+    ``xxhash64`` of the band's slice of the signature. Callers filter out
+    null signatures first, each where its plan needs it."""
     rows_per_band = num_hashes // bands
     band_cols = [
         F.xxhash64(
@@ -374,19 +372,27 @@ def _lsh_pairs_from_sig(
         ).alias(f"band_{b}")
         for b in range(bands)
     ]
+    return sig.select("id", *band_cols).select(
+        "id",
+        F.explode(F.array(*[
+            F.struct(F.lit(b).alias("band"),
+                     F.col(f"band_{b}").alias("bh"))
+            for b in range(bands)
+        ])).alias("e"),
+    ).select("id", "e.band", "e.bh")
+
+
+def _lsh_pairs_from_sig(
+    sig: DataFrame, num_hashes: int = 64, bands: int = 16
+) -> DataFrame:
+    """Banded bucket join over an (already persisted) ``(id, sig)`` table →
+    ``(id_a, id_b, n_matching_bands)``. Ids sharing any (band, band-hash)
+    bucket pair up; cost is per-bucket quadratic, never all-pairs."""
     # null signatures (null input text) must not band: xxhash64 SKIPS null
     # children, so every null-sig doc would otherwise share one band hash
     # and pair with every other null-sig doc
-    banded = sig.filter(F.col("sig").isNotNull()).select("id", *band_cols)
-    stacked = banded.select(
-        "id",
-        F.explode(
-            F.array(*[
-                F.struct(F.lit(b).alias("band"), F.col(f"band_{b}").alias("bh"))
-                for b in range(bands)
-            ])
-        ).alias("e"),
-    ).select("id", "e.band", "e.bh")
+    stacked = _lsh_bands(sig.filter(F.col("sig").isNotNull()),
+                         num_hashes, bands)
     return (
         stacked.alias("l")
         .join(stacked.alias("r"),
@@ -582,23 +588,7 @@ def build_minhash_index(
     sig = _minhash_sig_frame(
         df.filter(F.col(text_col).isNotNull()), id_col,
         _token_hashes(F.col(text_col)), num_hashes, shingle_size)
-    rows_per_band = num_hashes // bands
-    band_cols = [
-        F.xxhash64(
-            F.lit(b), *[F.col("sig")[b * rows_per_band + r]
-                        for r in range(rows_per_band)]
-        ).alias(f"band_{b}")
-        for b in range(bands)
-    ]
-    banded = sig.select("id", *band_cols)
-    return banded.select(
-        "id",
-        F.explode(F.array(*[
-            F.struct(F.lit(b).alias("band"),
-                     F.col(f"band_{b}").alias("bh"))
-            for b in range(bands)
-        ])).alias("e"),
-    ).select("id", "e.band", "e.bh")
+    return _lsh_bands(sig, num_hashes, bands)
 
 
 def against_index(

@@ -17,7 +17,7 @@ column pruning drops the bytes when only metadata is needed.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -201,28 +201,37 @@ def decode_images(
     )
 
 
+_BLOB_SCHEMA = T.StructType([
+    T.StructField("doc_id", T.LongType()),
+    T.StructField("blob", T.BinaryType()),
+])
+
+
+def _synthesize_blobs(df: DataFrame, id_col: str,
+                      blob_of: Callable[[int], bytes]) -> DataFrame:
+    """``(doc_id, blob)`` with ``blob_of(id)`` encoded per row in a
+    ``mapInPandas`` worker — the fixture scaffold every
+    ``synthesize_*_blobs`` shares."""
+
+    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            ids = pdf[id_col].tolist()
+            yield pd.DataFrame(
+                {"doc_id": ids, "blob": [blob_of(int(i)) for i in ids]})
+
+    return df.select(F.col(id_col).cast("long").alias(id_col)) \
+        .mapInPandas(build, schema=_BLOB_SCHEMA)
+
+
 def synthesize_bmp_blobs(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Deterministically synthesize a real BMP blob per row from its id
     (width = 4 + id % 16, height = 4 + (id // 16) % 16, all pixels =
     id % 256) — gives the decode path an oracle: after decode, width/
     height/mean_pixel must equal those closed-form expressions."""
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].tolist()
-            blobs = [
-                encode_bmp(4 + int(i) % 16, 4 + (int(i) // 16) % 16,
-                           int(i) % 256)
-                for i in ids
-            ]
-            yield pd.DataFrame({"doc_id": ids, "blob": blobs})
-
-    schema = T.StructType([
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("blob", T.BinaryType()),
-    ])
-    return df.select(F.col(id_col).cast("long").alias(id_col)) \
-        .mapInPandas(build, schema=schema)
+    return _synthesize_blobs(
+        df, id_col,
+        lambda i: encode_bmp(4 + i % 16, 4 + (i // 16) % 16, i % 256))
 
 
 # --------------------------------------------------------------- PNG (real)
@@ -465,24 +474,12 @@ def synthesize_png_blobs(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     expressions, so any inflate/un-filter/stride/pass-lattice bug breaks
     the oracle hash."""
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].tolist()
-            blobs = []
-            for i in ids:
-                i = int(i)
-                w, h, v = 4 + i % 16, 4 + (i // 16) % 16, i % 256
-                px = np.full((h, w, 3), v, dtype=np.uint8)
-                blobs.append(encode_png(px, filter_type=i % 3,
-                                        interlace=bool(i % 2)))
-            yield pd.DataFrame({"doc_id": ids, "blob": blobs})
+    def png(i: int) -> bytes:
+        w, h, v = 4 + i % 16, 4 + (i // 16) % 16, i % 256
+        px = np.full((h, w, 3), v, dtype=np.uint8)
+        return encode_png(px, filter_type=i % 3, interlace=bool(i % 2))
 
-    schema = T.StructType([
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("blob", T.BinaryType()),
-    ])
-    return df.select(F.col(id_col).cast("long").alias(id_col)) \
-        .mapInPandas(build, schema=schema)
+    return _synthesize_blobs(df, id_col, png)
 
 
 # ------------------------------------------------- baseline JPEG (real, r10)
@@ -1927,6 +1924,13 @@ def decode_jpeg_gray(data: bytes) -> tuple[int, int, int, float]:
     return decode_jpeg(data)
 
 
+def _gray_jpeg_pixels(i: int) -> "np.ndarray":
+    """The grayscale JPEG fixtures' constant plane: 8 × (1 + i % 4) wide,
+    8 × (1 + (i // 4) % 4) high, every pixel 2 × (i % 64) + 128."""
+    w, hgt = 8 * (1 + i % 4), 8 * (1 + (i // 4) % 4)
+    return np.full((hgt, w), 2 * (i % 64) + 128, dtype=np.uint8)
+
+
 def synthesize_jpeg_blobs(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Deterministically synthesize a REAL baseline JPEG per row from its
     id: width = 8 × (1 + id % 4), height = 8 × (1 + (id // 4) % 4), all
@@ -1936,24 +1940,8 @@ def synthesize_jpeg_blobs(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     closed forms and the oracle can hash-check the full Huffman + DCT
     path end to end."""
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].tolist()
-            blobs = []
-            for i in ids:
-                i = int(i)
-                w, hgt = 8 * (1 + i % 4), 8 * (1 + (i // 4) % 4)
-                v = 2 * (i % 64) + 128
-                px = np.full((hgt, w), v, dtype=np.uint8)
-                blobs.append(encode_jpeg_gray(px))
-            yield pd.DataFrame({"doc_id": ids, "blob": blobs})
-
-    schema = T.StructType([
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("blob", T.BinaryType()),
-    ])
-    return df.select(F.col(id_col).cast("long").alias(id_col)) \
-        .mapInPandas(build, schema=schema)
+    return _synthesize_blobs(
+        df, id_col, lambda i: encode_jpeg_gray(_gray_jpeg_pixels(i)))
 
 
 def synthesize_jpeg_progressive_blobs(df: DataFrame,
@@ -1965,24 +1953,9 @@ def synthesize_jpeg_progressive_blobs(df: DataFrame,
     path: spectral selection, DC successive approximation + refinement,
     and the EOB-run coding of the (all-zero) AC bands."""
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].tolist()
-            blobs = []
-            for i in ids:
-                i = int(i)
-                w, hgt = 8 * (1 + i % 4), 8 * (1 + (i // 4) % 4)
-                v = 2 * (i % 64) + 128
-                px = np.full((hgt, w), v, dtype=np.uint8)
-                blobs.append(encode_jpeg_progressive_gray(px))
-            yield pd.DataFrame({"doc_id": ids, "blob": blobs})
-
-    schema = T.StructType([
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("blob", T.BinaryType()),
-    ])
-    return df.select(F.col(id_col).cast("long").alias(id_col)) \
-        .mapInPandas(build, schema=schema)
+    return _synthesize_blobs(
+        df, id_col,
+        lambda i: encode_jpeg_progressive_gray(_gray_jpeg_pixels(i)))
 
 
 def synthesize_jpeg_blobs_with_corruption(
@@ -1995,26 +1968,11 @@ def synthesize_jpeg_blobs_with_corruption(
     path: after ``decode_images(..., on_error="null")``, exactly the
     planted rows must carry a ``decode_error``."""
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].tolist()
-            blobs = []
-            for i in ids:
-                i = int(i)
-                w, hgt = 8 * (1 + i % 4), 8 * (1 + (i // 4) % 4)
-                v = 2 * (i % 64) + 128
-                blob = encode_jpeg_gray(np.full((hgt, w), v, dtype=np.uint8))
-                if i % corrupt_mod == corrupt_rem:
-                    blob = blob[:30]
-                blobs.append(blob)
-            yield pd.DataFrame({"doc_id": ids, "blob": blobs})
+    def jpeg(i: int) -> bytes:
+        blob = encode_jpeg_gray(_gray_jpeg_pixels(i))
+        return blob[:30] if i % corrupt_mod == corrupt_rem else blob
 
-    schema = T.StructType([
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("blob", T.BinaryType()),
-    ])
-    return df.select(F.col(id_col).cast("long").alias(id_col)) \
-        .mapInPandas(build, schema=schema)
+    return _synthesize_blobs(df, id_col, jpeg)
 
 
 def synthesize_jpeg_color_blobs(df: DataFrame,
@@ -2031,25 +1989,14 @@ def synthesize_jpeg_color_blobs(df: DataFrame,
     round(Y + 1.772·dCb)) / 3 — the oracle hash-checks the entire
     interleaved-MCU + subsampling + YCbCr→RGB path end to end."""
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].tolist()
-            blobs = []
-            for i in ids:
-                i = int(i)
-                w, hgt = 16 * (1 + i % 3), 16 * (1 + (i // 3) % 3)
-                y = np.full((hgt, w), 128.0 + 2 * (i % 32))
-                cb = np.full((hgt, w), 128.0 + 2 * ((i // 7) % 21 - 10))
-                cr = np.full((hgt, w), 128.0 + 2 * ((i // 11) % 21 - 10))
-                blobs.append(encode_jpeg_ycbcr(y, cb, cr, (2, 2)))
-            yield pd.DataFrame({"doc_id": ids, "blob": blobs})
+    def jpeg(i: int) -> bytes:
+        w, hgt = 16 * (1 + i % 3), 16 * (1 + (i // 3) % 3)
+        y = np.full((hgt, w), 128.0 + 2 * (i % 32))
+        cb = np.full((hgt, w), 128.0 + 2 * ((i // 7) % 21 - 10))
+        cr = np.full((hgt, w), 128.0 + 2 * ((i // 11) % 21 - 10))
+        return encode_jpeg_ycbcr(y, cb, cr, (2, 2))
 
-    schema = T.StructType([
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("blob", T.BinaryType()),
-    ])
-    return df.select(F.col(id_col).cast("long").alias(id_col)) \
-        .mapInPandas(build, schema=schema)
+    return _synthesize_blobs(df, id_col, jpeg)
 
 
 def synthesize_jpeg_cmyk_blobs(df: DataFrame,
@@ -2067,34 +2014,21 @@ def synthesize_jpeg_cmyk_blobs(df: DataFrame,
     ink average, so any APP14 / inversion / YCCK-transform / 4-comp
     interleave bug breaks the oracle hash."""
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].tolist()
-            blobs = []
-            for i in ids:
-                i = int(i)
-                w, hgt = 8 * (1 + i % 3), 8 * (1 + (i // 3) % 3)
-                k = 2 * ((i // 11) % 127) + 1
-                ink = np.zeros((hgt, w, 4), np.uint8)
-                if i % 2 == 0:
-                    ink[..., 0] = 2 * (i % 127) + 1
-                    ink[..., 1] = 2 * ((i // 3) % 127) + 1
-                    ink[..., 2] = 2 * ((i // 7) % 127) + 1
-                    tr = 0
-                else:
-                    ink[..., 0] = ink[..., 1] = ink[..., 2] = \
-                        2 * (i % 127) + 1
-                    tr = 2
-                ink[..., 3] = k
-                blobs.append(encode_jpeg_cmyk(ink, transform=tr))
-            yield pd.DataFrame({"doc_id": ids, "blob": blobs})
+    def jpeg(i: int) -> bytes:
+        w, hgt = 8 * (1 + i % 3), 8 * (1 + (i // 3) % 3)
+        ink = np.zeros((hgt, w, 4), np.uint8)
+        if i % 2 == 0:
+            ink[..., 0] = 2 * (i % 127) + 1
+            ink[..., 1] = 2 * ((i // 3) % 127) + 1
+            ink[..., 2] = 2 * ((i // 7) % 127) + 1
+            tr = 0
+        else:
+            ink[..., 0] = ink[..., 1] = ink[..., 2] = 2 * (i % 127) + 1
+            tr = 2
+        ink[..., 3] = 2 * ((i // 11) % 127) + 1
+        return encode_jpeg_cmyk(ink, transform=tr)
 
-    schema = T.StructType([
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("blob", T.BinaryType()),
-    ])
-    return df.select(F.col(id_col).cast("long").alias(id_col)) \
-        .mapInPandas(build, schema=schema)
+    return _synthesize_blobs(df, id_col, jpeg)
 
 
 def synthesize_jpeg_lossless_blobs(df: DataFrame,
@@ -2107,25 +2041,13 @@ def synthesize_jpeg_lossless_blobs(df: DataFrame,
     and the oracle hash covers every predictor, the diff Huffman path,
     and the Annex H first-line/first-sample rules."""
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].tolist()
-            blobs = []
-            for i in ids:
-                i = int(i)
-                w, hgt, v = 4 + i % 16, 4 + (i // 16) % 16, i % 200
-                grid = (v + np.arange(w)[None, :]
-                        + np.arange(hgt)[:, None]).astype(np.uint8)
-                blobs.append(encode_jpeg_lossless(grid,
-                                                  predictor=1 + i % 7))
-            yield pd.DataFrame({"doc_id": ids, "blob": blobs})
+    def jpeg(i: int) -> bytes:
+        w, hgt, v = 4 + i % 16, 4 + (i // 16) % 16, i % 200
+        grid = (v + np.arange(w)[None, :]
+                + np.arange(hgt)[:, None]).astype(np.uint8)
+        return encode_jpeg_lossless(grid, predictor=1 + i % 7)
 
-    schema = T.StructType([
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("blob", T.BinaryType()),
-    ])
-    return df.select(F.col(id_col).cast("long").alias(id_col)) \
-        .mapInPandas(build, schema=schema)
+    return _synthesize_blobs(df, id_col, jpeg)
 
 
 # ----------------------------------------------------------- WAV/PCM (real)
@@ -2174,21 +2096,9 @@ def synthesize_wav_blobs(df: DataFrame, id_col: str = "doc_id",
     its id (constant amplitude = id % 1000) — gives the audio decode path
     an oracle: every frame's RMS must equal exactly ``id % 1000``."""
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].tolist()
-            blobs = [
-                encode_wav(np.full(n_samples, int(i) % 1000, dtype=np.int16))
-                for i in ids
-            ]
-            yield pd.DataFrame({"doc_id": ids, "blob": blobs})
-
-    schema = T.StructType([
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("blob", T.BinaryType()),
-    ])
-    return df.select(F.col(id_col).cast("long").alias(id_col)) \
-        .mapInPandas(build, schema=schema)
+    return _synthesize_blobs(
+        df, id_col,
+        lambda i: encode_wav(np.full(n_samples, i % 1000, dtype=np.int16)))
 
 
 def sample_audio_frames(

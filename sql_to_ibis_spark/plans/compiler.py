@@ -428,26 +428,15 @@ class Compiler:
                 break
             node = rewritten
         # shared-window decorrelation must see the ORIGINAL join chains
-        # (the constraint rewrite below replaces dims with flag joins,
+        # (the constraint rewrite after it replaces dims with flag joins,
         # which would break the inner↔outer tree match)
-        rewritten = self._try_shared_window_decorrelate(node)
-        if rewritten is not None:
-            node = rewritten
-        rewritten = self._try_constraint_join_rewrites(node)
-        if rewritten is not None:
-            node = rewritten
-        rewritten = self._try_parse_per_distinct(node)
-        if rewritten is not None:
-            node = rewritten
-        rewritten = self._try_neq_exists_collapse(node)
-        if rewritten is not None:
-            node = rewritten
-        rewritten = self._try_eager_aggregation(node)
-        if rewritten is not None:
-            node = rewritten
-        rewritten = self._try_left_fact_agg(node)
-        if rewritten is not None:
-            node = rewritten
+        for rewrite in (self._try_shared_window_decorrelate,
+                        self._try_constraint_join_rewrites,
+                        self._try_parse_per_distinct,
+                        self._try_neq_exists_collapse,
+                        self._try_eager_aggregation,
+                        self._try_left_fact_agg):
+            node = rewrite(node) or node
         self._rewrite_low_ndv_count_distinct(node)
         if node.relations:
             df: DataFrame | None = None
@@ -675,8 +664,7 @@ class Compiler:
                 r = restricted()
                 refs = self._bind_correlated_scalar(
                     sq, scope, joins, r if r is not None else df,
-                    r is not None, outer_single, wincols, multi=True,
-                    outer_node=node)
+                    r is not None, outer_single, wincols, multi=True)
             else:
                 sub = self.compile(sq)
                 names = [f"__scalar_{next(self._tmp_counter)}"
@@ -705,8 +693,7 @@ class Compiler:
                 return self._bind_correlated_scalar(e.subquery, scope, joins,
                                                     r if r is not None else df,
                                                     r is not None,
-                                                    outer_single, wincols,
-                                                    outer_node=node)
+                                                    outer_single, wincols)
             if allow_total[0]:
                 marker = self._try_total_over_groups(e.subquery, node,
                                                      scope)
@@ -4265,137 +4252,6 @@ class Compiler:
             out = out.filter(self.compile_expr(conj, scope))
         return out
 
-    def _single_relation_key_source(
-        self, node: ast.SelectNode, scope: Scope,
-        outer_refs: list[ast.Expr],
-        sub: "ast.SelectNode | None" = None,
-    ) -> DataFrame | None:
-        """Magic-set key source from ONE base relation when restricting
-        the full outer is gated off.
-
-        If every outer-side correlation key is a plain column of the same
-        base catalog table R, the decorrelated aggregation only needs the
-        groups whose keys exist in σ(R) — R filtered by the deterministic
-        subquery-free WHERE conjuncts that reference only R. Sound
-        because joins and the other conjuncts can only REMOVE R-rows, so
-        σ(R)'s key set is a superset of the real outer's; extra keys just
-        aggregate a few unused groups. Unlike ``_restrict_outer`` this
-        never re-executes the outer join — it rescans one base table
-        (TPC-H q2: part with p_size=…, 2 % of keys → the inner lineitem
-        aggregation shrinks ~50×).
-
-        Gates: R must have footer stats with rows ≤ 8M (the rescan +
-        distinct must stay dim-table cheap); at least one of its
-        conjuncts must be shape-selective (equality/IN/range/BETWEEN/
-        IS NULL — not <>/IS NOT NULL, which keep ~everything); and the
-        subquery's largest base table must be ≥ 4M rows by footer stats
-        (below that the saved aggregation is smaller than the extra
-        broadcast stage's scheduling floor — measured q2: −29 % at sf10,
-        −15 % at sf1, +11 % at sf0.1 where the gate now bails).
-        ``SPARK_GRAFT_SINGLE_REL_MAGIC=0`` disables; ``=1`` forces past
-        the two row-count gates (shape gates still apply) so the
-        forced-gate oracle sweep can exercise the rewrite — uniform row
-        inflation would otherwise CLOSE the dim-side ≤8M gate and leave
-        this path untested."""
-        if node.where is None or self.opts.single_rel_magic is False:
-            return None
-        forced = self.opts.single_rel_magic is True
-        inner_rows = 0.0
-        if sub is not None:
-            stack: list[ast.Relation] = list(sub.relations)
-            while stack:
-                r = stack.pop()
-                if isinstance(r, ast.Join):
-                    stack += [r.left, r.right]
-                elif isinstance(r, ast.TableRef) \
-                        and r.name.lower() not in self._cte_frames:
-                    try:
-                        ist = self.catalog.get(r.name).stats
-                    except Exception:
-                        continue
-                    if ist is not None and getattr(ist, "rows", None):
-                        inner_rows = max(inner_rows, float(ist.rows))
-        if inner_rows < 4_000_000 and not forced:
-            return None
-        infos: dict[int, RelationInfo] = {}
-        for e in outer_refs:
-            if not isinstance(e, ast.ColumnRef):
-                return None
-            try:
-                info, _ = scope.resolve(e.name, e.table)
-            except Exception:
-                return None
-            infos[id(info)] = info
-        if len(infos) != 1:
-            return None
-        rel_info = next(iter(infos.values()))
-
-        base: ast.TableRef | None = None
-
-        def find(r: ast.Relation) -> None:
-            nonlocal base
-            if isinstance(r, ast.Join):
-                find(r.left)
-                find(r.right)
-            elif isinstance(r, ast.TableRef) and \
-                    (r.alias or r.name).lower() == rel_info.display.lower():
-                base = r
-
-        for r in node.relations:
-            find(r)
-        if base is None or base.name.lower() in self._cte_frames:
-            return None
-        try:
-            entry = self.catalog.get(base.name)
-        except Exception:
-            return None
-        st = entry.stats
-        if (st is None or not getattr(st, "rows", None)
-                or st.rows > 8_000_000) and not forced:
-            return None
-
-        def refs_only_rel(conj: ast.Expr) -> bool:
-            refs: list[ast.ColumnRef] = []
-            _collect_column_refs(conj, refs)
-            if not refs:
-                return False
-            for cr in refs:
-                try:
-                    owner, _ = scope.resolve(cr.name, cr.table)
-                except Exception:
-                    return False
-                if owner is not rel_info:
-                    return False
-            return True
-
-        def shape_selective(conj: ast.Expr) -> bool:
-            if isinstance(conj, ast.Between):
-                return not conj.negated
-            if isinstance(conj, ast.InList):
-                return not conj.negated
-            if isinstance(conj, ast.IsNull):
-                return not conj.negated
-            if isinstance(conj, ast.BinaryOp) \
-                    and conj.op in ("=", "<", "<=", ">", ">="):
-                sides = []
-                for side in (conj.left, conj.right):
-                    refs: list[ast.ColumnRef] = []
-                    _collect_column_refs(side, refs)
-                    sides.append(bool(refs))
-                return sides == [True, False] or sides == [False, True]
-            return False
-
-        own = [c for c in self._split_conjuncts(node.where)
-               if not self._contains_any_subquery(c)
-               and not self._contains_nondeterministic(c)
-               and refs_only_rel(c)]
-        if not own or not any(shape_selective(c) for c in own):
-            return None
-        out = entry.df.alias(rel_info.qualifier)
-        for conj in own:
-            out = out.filter(self.compile_expr(conj, scope))
-        return out
-
     def _partition_complete(
         self, conj: ast.Expr, allowed: set, scope: Scope
     ) -> bool:
@@ -4465,7 +4321,6 @@ class Compiler:
         outer_single: tuple[str, str] | None = None,
         wincols: list[tuple[str, Column]] | None = None,
         multi: bool = False,
-        outer_node: "ast.SelectNode | None" = None,
     ) -> "ast.Expr | list[ast.Expr]":
         """Decorrelate a scalar subquery. With ``multi=True`` (internal,
         from the fused quantified-comparison lowering) ``sub`` may have
@@ -4512,7 +4367,6 @@ class Compiler:
             okey_cols: list[Column] = []
             inner_key_cols: list[Column] = []
             key_names: list[str] = []
-            outer_refs: list[ast.Expr] = []
             cond: Column | None = None
             for conj in correlated:
                 li = self._resolves_in(conj.left, inner_scope)
@@ -4530,7 +4384,6 @@ class Compiler:
                 kname = f"__ck_{next(self._tmp_counter)}"
                 key_cols.append(
                     self.compile_expr(inner_e, inner_scope).alias(kname))
-                outer_refs.append(outer_e)
                 outer_col = self.compile_expr(outer_e, scope)
                 okey_cols.append(outer_col.alias(kname))
                 inner_key_cols.append(
@@ -4539,7 +4392,6 @@ class Compiler:
                 piece = outer_col == F.col(_bq(kname))
                 cond = piece if cond is None else (cond & piece)
             grouped_src = inner_df
-            keys_src: DataFrame | None = None
             if outer_is_restricted:
                 # magic-set restriction: aggregate only the groups the
                 # filtered outer can request. The semi join shuffles the
@@ -4547,18 +4399,7 @@ class Compiler:
                 # aggregation reuses that partitioning — the only added
                 # work is the (small) distinct over the filtered outer's
                 # keys, and AQE broadcasts it when it is tiny.
-                keys_src = outer_df
-            elif outer_node is not None:
-                # the full-outer restriction was gated off (re-executing a
-                # wide outer join costs more than it saves) — but when all
-                # correlation keys come from ONE base relation that has
-                # its own selective conjuncts, the key domain is that
-                # single relation filtered by them: one cheap dim scan,
-                # never the joined outer (the TPC-H q2 shape)
-                keys_src = self._single_relation_key_source(
-                    outer_node, scope, outer_refs, sub)
-            if keys_src is not None:
-                keys_df = keys_src.select(*okey_cols).distinct()
+                keys_df = outer_df.select(*okey_cols).distinct()
                 semi: Column | None = None
                 for kcol_name, ic in zip(key_names, inner_key_cols):
                     piece = ic == keys_df[kcol_name]

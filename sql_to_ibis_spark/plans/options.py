@@ -29,7 +29,6 @@ class PlannerOptions:
     prepart_agg: bool | None = None
     semi_build_keyset: bool | None = None
     semijoin_reduction: bool | None = None     # both size gates
-    single_rel_magic: bool | None = None
     total_pin: bool | None = None
     # passes that can only be switched off: =1 is the same as unset
     cte_scalar_attach: bool | None = None

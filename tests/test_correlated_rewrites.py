@@ -328,11 +328,11 @@ class TestAdviceRegressionsR7:
 
 class TestSingleRelationMagicSet:
     """The TPC-H q2 shape: the outer is a wide join (so the full-outer
-    restriction is gated off), but every correlation key comes from ONE
-    dimension with its own selective filter — the key set is that single
-    filtered relation, never the re-executed outer join. Gated on the
-    inner's footer-stats scale (≥4M rows), so tests open it with
-    synthetic stats the way the forced-gate sweep does."""
+    restriction is gated off) and every correlation key comes from ONE
+    dimension with its own selective filter. The shared-tree window
+    decorrelation claims it; with that rewrite off, the stock grouped
+    decorrelation aggregates the inner per key with no semi join. Tests
+    give lineitem synthetic stats the way the forced-gate sweep does."""
 
     Q2ISH = (
         "SELECT DISTINCT s.s_name, p.p_partkey FROM part p "
@@ -354,66 +354,29 @@ class TestSingleRelationMagicSet:
         st.rows = 10_000_000
         return eng
 
-    def _semi_count(self, eng, sql):
-        return plan_of(eng.query(sql), "simple").count("LeftSemi")
-
     def test_default_path_is_shared_window(self, big_engine, ddb):
-        # r14: the shared-tree window decorrelation now claims this shape
-        # (inner lineitem ⊂ outer tree, MIN aggregate) ahead of the
-        # magic-set join path — derived window, no second lineitem tree
+        # the shared-tree window decorrelation claims this shape (inner
+        # lineitem ⊂ outer tree, MIN aggregate): derived window, no
+        # second lineitem tree
         plan = plan_of(big_engine.query(self.Q2ISH), "simple")
         assert "__corrwin0" in plan, plan
         compare_frames(big_engine.query(self.Q2ISH).toPandas(),
                        ddb.execute(self.Q2ISH).fetchdf())
 
     def test_fires_and_matches_oracle(self, big_engine, ddb, monkeypatch):
-        # the join-path magic set is still the fallback when the window
-        # rewrite is off — pin it behind that switch
+        # window rewrite off: the inner is grouped by its correlation key
+        # over every part, with no key-set semi join in front of it
         monkeypatch.setenv("SPARK_GRAFT_SHARED_WINDOW_DECORRELATE", "0")
-        on = self._semi_count(big_engine, self.Q2ISH)
-        monkeypatch.setenv("SPARK_GRAFT_SINGLE_REL_MAGIC", "0")
-        off = self._semi_count(big_engine, self.Q2ISH)
-        assert on == off + 1, (on, off)
-        monkeypatch.delenv("SPARK_GRAFT_SINGLE_REL_MAGIC")
+        plan = plan_of(big_engine.query(self.Q2ISH), "simple")
+        assert "__corrwin" not in plan, plan
+        assert "__ck_" in plan, plan
+        assert plan.count("LeftSemi") == 0, plan
         compare_frames(big_engine.query(self.Q2ISH).toPandas(),
                        ddb.execute(self.Q2ISH).fetchdf())
 
-    def test_small_inner_bails(self, engine, monkeypatch):
-        # session engine keeps the REAL (tiny) footer stats → scale gate
-        monkeypatch.setenv("SPARK_GRAFT_SHARED_WINDOW_DECORRELATE", "0")
-        on = self._semi_count(engine, self.Q2ISH)
-        monkeypatch.setenv("SPARK_GRAFT_SINGLE_REL_MAGIC", "0")
-        off = self._semi_count(engine, self.Q2ISH)
-        assert on == off
-
-    def test_weak_conjunct_bails(self, big_engine, monkeypatch):
-        # <> keeps ~everything: not shape-selective, restriction skipped
-        monkeypatch.setenv("SPARK_GRAFT_SHARED_WINDOW_DECORRELATE", "0")
-        q = self.Q2ISH.replace("p.p_size = 15", "p.p_size <> 15")
-        on = self._semi_count(big_engine, q)
-        monkeypatch.setenv("SPARK_GRAFT_SINGLE_REL_MAGIC", "0")
-        off = self._semi_count(big_engine, q)
-        assert on == off
-
-    def test_keys_from_two_relations_bail(self, big_engine, monkeypatch):
-        # correlation keys spanning part AND supplier: no single source
-        q = (
-            "SELECT count(*) AS n FROM part p "
-            "JOIN lineitem l ON l.l_partkey = p.p_partkey "
-            "JOIN supplier s ON s.s_suppkey = l.l_suppkey "
-            "WHERE p.p_size = 15 AND l.l_extendedprice < ("
-            "  SELECT avg(l2.l_extendedprice) FROM lineitem l2 "
-            "  WHERE l2.l_partkey = p.p_partkey "
-            "  AND l2.l_suppkey = s.s_suppkey)"
-        )
-        on = self._semi_count(big_engine, q)
-        monkeypatch.setenv("SPARK_GRAFT_SINGLE_REL_MAGIC", "0")
-        off = self._semi_count(big_engine, q)
-        assert on == off
-
     def test_null_key_dimension_rows(self, spark, monkeypatch):
-        # NULL dim keys: never equal any inner key; restricted and
-        # unrestricted plans must agree (NULL scalar → row dropped)
+        # NULL dim keys never equal an inner key: the window and the
+        # grouped decorrelation must both drop that row (NULL scalar)
         eng = SqlEngine(spark)
         import pandas as _pd
 
@@ -427,25 +390,23 @@ class TestSingleRelationMagicSet:
         eng.register_temp_table(dim, "dim")
         eng.register_temp_table(fact, "fact")
         eng.register_temp_table(other, "oth")
-
-        class _St:
-            rows = 10_000_000
-        for t in ("fact",):
-            eng.catalog.get(t).stats = _St()
-        for t in ("dim",):
-            st = _St()
-            st.rows = 4
-            eng.catalog.get(t).stats = st
         sql = (
             "SELECT count(*) AS n FROM dim d "
             "JOIN fact f ON f.fk = d.dk "
             "JOIN oth o ON o.ok = f.fk "
             "WHERE d.dsize = 15 AND f.fv = ("
             "  SELECT min(f2.fv) FROM fact f2 WHERE f2.fk = d.dk)")
-        got_on = eng.query(sql).collect()
-        monkeypatch.setenv("SPARK_GRAFT_SINGLE_REL_MAGIC", "0")
-        got_off = eng.query(sql).collect()
-        assert got_on == got_off
+        window_plan = plan_of(eng.query(sql), "simple")
+        got_window = eng.query(sql).collect()
+        monkeypatch.setenv("SPARK_GRAFT_SHARED_WINDOW_DECORRELATE", "0")
+        grouped_plan = plan_of(eng.query(sql), "simple")
+        got_grouped = eng.query(sql).collect()
+        assert "__corrwin" in window_plan, window_plan
+        assert "__corrwin" not in grouped_plan, grouped_plan
+        # dk 1 keeps fv 5 and dk 2 keeps fv 3; the NULL-key row matches
+        # no fact row
+        assert got_window == got_grouped
+        assert got_window[0]["n"] == 2
         for t in ("dim", "fact", "oth"):
             eng.remove_temp_table(t)
 

@@ -74,6 +74,43 @@ def test_every_set_switch_is_read():
         f"switch: {stale}")
 
 
+def _env_reads(path: pathlib.Path) -> set[str]:
+    """``SPARK_GRAFT_*`` names ``path`` reads with ``os.environ.get``,
+    ``os.environ[...]`` or ``os.getenv``."""
+
+    def is_environ(n: ast.AST) -> bool:
+        return isinstance(n, ast.Attribute) and n.attr == "environ"
+
+    out: set[str] = set()
+    for n in ast.walk(ast.parse(path.read_text(encoding="utf-8"))):
+        key = None
+        if isinstance(n, ast.Call) and n.args and isinstance(
+                n.func, ast.Attribute) and (
+                (n.func.attr == "get" and is_environ(n.func.value))
+                or n.func.attr == "getenv"):
+            key = n.args[0]
+        elif isinstance(n, ast.Subscript) and is_environ(n.value):
+            key = n.slice
+        if isinstance(key, ast.Constant) and isinstance(key.value, str) \
+                and NAME.fullmatch(key.value):
+            out.add(key.value)
+    return out
+
+
+def test_every_entry_knob_is_set_somewhere():
+    # a knob __spark_entry__.py reads but no test, script, benchmark or
+    # bench.py sets is a set-up path nobody runs
+    setters = [p for d in ("tests", "scripts", "perfbench")
+               for p in (ROOT / d).rglob("*.py")
+               if p.resolve() != pathlib.Path(__file__).resolve()]
+    setters.append(ROOT / "bench.py")
+    unset = sorted(_env_reads(ROOT / "__spark_entry__.py")
+                   - PLANNER - _literals(setters))
+    assert not unset, (
+        f"__spark_entry__.py reads {unset}, which no string literal under "
+        f"tests/, scripts/, perfbench/ or in bench.py sets")
+
+
 def test_planner_reads_env_only_in_options():
     plans = ROOT / "sql_to_ibis_spark" / "plans"
     readers = sorted(p.name for p in plans.glob("*.py")

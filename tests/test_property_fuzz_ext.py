@@ -176,7 +176,6 @@ def _forced_env(**pairs):
 
 GATE_VARS = ("SPARK_GRAFT_SEMI_BUILD_KEYSET",
              "SPARK_GRAFT_EXISTS_DEDUP_REWRITE",
-             "SPARK_GRAFT_SINGLE_REL_MAGIC",
              "SPARK_GRAFT_EAGER_AGG")
 
 

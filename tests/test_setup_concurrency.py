@@ -124,3 +124,18 @@ def test_analyze_failure_names_the_table_and_spares_the_rest(spark):
     good = eng.catalog.get("good").stats
     assert good.rows == 7 and good.ndv == {"v": 3.0}
     assert (good.col_min, good.col_max) == ({"v": 0}, {"v": 2})
+
+
+def test_entry_engine_set_up_failure_raises_and_caches_nothing(
+        spark, monkeypatch):
+    # a failed analyze() must not leave an engine planning without stats
+    import __spark_entry__ as entrymod
+
+    def broken(self, table_name=None):
+        raise SqlEngineError("analyze failed")
+
+    monkeypatch.setattr(SqlEngine, "analyze", broken)
+    monkeypatch.setattr(entrymod, "_ENGINES", {})
+    with pytest.raises(SqlEngineError, match="analyze failed"):
+        entrymod._engine_for(spark, SF_DIR)
+    assert entrymod._ENGINES == {}
